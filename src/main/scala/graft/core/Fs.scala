@@ -38,4 +38,13 @@ object Fs {
     try out.write(content.getBytes(StandardCharsets.UTF_8))
     finally out.close()
   }
+
+  /** Read a small UTF-8 text file written by [[writeString]]; None when
+    * absent. */
+  def readString(spark: SparkSession, path: String): Option[String] =
+    try {
+      val in = fileSystem(spark, path).open(new Path(path))
+      try Some(new String(in.readAllBytes(), StandardCharsets.UTF_8))
+      finally in.close()
+    } catch { case _: java.io.FileNotFoundException => None }
 }

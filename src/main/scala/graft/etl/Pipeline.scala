@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.Schemas
@@ -61,21 +61,24 @@ class Pipeline(
   def marketsWarehousePath: String = s"$warehouseRoot/markets"
 
   /** Incremental per-ticker extraction (reference E1+E2 chained):
-    * watermark+1day as from-date, transform, lake append, stage overwrite,
-    * anti-join merge, then monotone state advance. Returns rows inserted. */
+    * watermark+1day as from-date, transform, lake write, stage overwrite,
+    * anti-join merge, then monotone state advance. Returns rows inserted.
+    * The batch's row count and max date ride the lake write as observed
+    * metrics: the three writes and the merge's key broadcast are the only
+    * Spark jobs. */
   def runStock(ticker: String): Long = {
     val wm = state.watermark("Stock", ticker)
     val from = java.time.LocalDate.parse(wm).plusDays(1).toString // F4
     val raw = graft.ops.Validate.requireSchema(
       source.eod(ticker, from), Schemas.eodRaw) // declared-schema contract (§1.2)
-    if (raw.isEmpty) return 0L // S5 empty-result short-circuit: no state move
     val prices = Transforms.transformStock(raw, ticker)
-    Lake.writeStocks(prices, lakeRoot)
-    Scd0.stageLoad(prices, s"$warehouseRoot/stage_stock_prices")
-    val inserted = Scd0.mergeAppend(
-      spark.read.parquet(s"$warehouseRoot/stage_stock_prices"),
-      stocksWarehousePath, "stock_key")
-    val newWm = prices.agg(max(col("stock_date")).cast("string")).collect()(0).getString(0)
+    val batch = Observation()
+    Lake.writeStocks(prices.observe(batch, count(lit(1)).as("rows"),
+      max(col("stock_date")).cast("string").as("max_date")), lakeRoot)
+    val m = observed(batch)
+    if (m.getLong(0) == 0L) return 0L // S5 empty-result short-circuit: no state move
+    val inserted = stageAndMerge(prices, "stage_stock_prices", stocksWarehousePath, "stock_key")
+    val newWm = m.getString(1)
     if (newWm != null && newWm > wm) state.advance("Stock", ticker, newWm)
     inserted
   }
@@ -84,17 +87,33 @@ class Pipeline(
     * MERCADOS ES FULL", `main.py:22-23`); state date is informational. */
   def runMarket(exchange: String): Long = {
     val raw = source.symbols(exchange)
-    if (raw.isEmpty) return 0L
-    val markets = Transforms.transformMarket(raw)
-    Lake.writeMarkets(markets, lakeRoot)
-    Scd0.stageLoad(markets, s"$warehouseRoot/stage_markets")
-    val inserted = Scd0.mergeAppend(
-      spark.read.parquet(s"$warehouseRoot/stage_markets"),
+    val batch = Observation()
+    // counted before the common-stock filter: a listing of only funds
+    // still refreshes the stage and the state date
+    Lake.writeMarkets(Transforms.transformMarket(
+      raw.observe(batch, count(lit(1)).as("rows"))), lakeRoot)
+    if (observed(batch).getLong(0) == 0L) return 0L
+    val inserted = stageAndMerge(Transforms.transformMarket(raw), "stage_markets",
       marketsWarehousePath, "market_stockid")
     state.advance("Market", exchange, java.time.LocalDate.now().toString)
     inserted
   }
 
-  def warehouseStocks(): DataFrame  = spark.read.parquet(stocksWarehousePath)
-  def warehouseMarkets(): DataFrame = spark.read.parquet(marketsWarehousePath)
+  /** Stage overwrite, then the SCD-0 merge of the stage read back with the
+    * schema just written. */
+  private def stageAndMerge(df: DataFrame, stage: String, warehousePath: String,
+      key: String): Long = {
+    val stagePath = s"$warehouseRoot/$stage"
+    Scd0.stageLoad(df, stagePath)
+    Scd0.mergeAppend(spark.read.schema(df.schema).parquet(stagePath), warehousePath, key)
+  }
+
+  /** Metrics observed on a write that has returned. */
+  private def observed(o: Observation): Row =
+    scala.concurrent.Await.result(o.future, scala.concurrent.duration.Duration(60, "s"))
+
+  def warehouseStocks(): DataFrame =
+    spark.read.schema(Schemas.stockPrices).parquet(stocksWarehousePath)
+  def warehouseMarkets(): DataFrame =
+    spark.read.schema(Schemas.markets).parquet(marketsWarehousePath)
 }

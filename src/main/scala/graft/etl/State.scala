@@ -1,7 +1,9 @@
 package graft.etl
 
+import scala.collection.mutable
+
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Incremental-extraction state store (reference `state.json` +
   * `API_manager.py:79-113`): a per-entity watermark with a full-backfill
@@ -10,9 +12,11 @@ import org.apache.spark.sql.functions._
   * The reference keeps a single JSON document `{Stock:{ticker→date},
   * Market:{exchange→date}}`; dynamic keys don't map to a declared schema,
   * so we store the same facts as a JSON-lines *table* of
-  * `(kind, key, watermark)` rows — readable with `spark.read.json`, and the
-  * advance rule is a distributed `groupBy.max`, so the store scales to any
-  * key cardinality (SURVEY §2.9).
+  * `(kind, key, watermark)` rows, readable with `spark.read.json`
+  * ([[load]]). The store holds one line per tracked entity, so
+  * [[watermark]] and [[advance]] read and rewrite it on the driver through
+  * the Hadoop FS API and run no Spark job; its size is bounded by the
+  * number of tickers and exchanges, not by the data they describe.
   */
 class StateStore(spark: SparkSession, path: String) {
   import StateStore._
@@ -30,20 +34,18 @@ class StateStore(spark: SparkSession, path: String) {
   /** Watermark for one key; the missing-key sentinel triggers full backfill
     * (`API_manager.py:91`: "traer el dato mas antiguo disponible"). */
   def watermark(kind: String, key: String): String =
-    load().filter(col("kind") === kind && col("key") === key)
-      .select("watermark").collect().headOption.map(_.getString(0))
-      .getOrElse(Sentinel)
+    entries().getOrElse((kind, key), Sentinel)
 
-  /** Monotone advance (`API_manager.py:104-106`: only move forward), merged
-    * distributed: union + groupBy max. Call AFTER the sink write succeeds —
-    * ordering is the at-least-once half of the effectively-once contract
-    * (the SCD-0 anti-join is the idempotence half). */
-  def advance(updates: DataFrame): Unit = {
-    val merged = load().unionByName(updates.selectExpr("kind", "key", "watermark"))
-      .groupBy("kind", "key").agg(max("watermark").as("watermark"))
-      .collect() // state cardinality = #tracked entities; tiny by contract
-    val lines = merged.map { r =>
-      s"""{"kind":${jstr(r.getString(0))},"key":${jstr(r.getString(1))},"watermark":${jstr(r.getString(2))}}"""
+  /** Monotone advance (`API_manager.py:104-106`: only move forward). Call
+    * AFTER the sink write succeeds — ordering is the at-least-once half of
+    * the effectively-once contract (the SCD-0 anti-join is the idempotence
+    * half). */
+  def advance(kind: String, key: String, watermark: String): Unit = {
+    val merged = entries()
+    keepLater(merged, (kind, key), watermark)
+    val lines = merged.map { case ((k, e), w) =>
+      Json.writeValueAsString(Json.createObjectNode()
+        .put("kind", k).put("key", e).put("watermark", w))
     }.mkString("", "\n", "\n")
     // write-then-atomic-rename through the Hadoop FS API: state is never
     // observed half-written, on HDFS/S3A/local alike
@@ -52,25 +54,32 @@ class StateStore(spark: SparkSession, path: String) {
     graft.core.Fs.renameOverwrite(spark, tmp, path)
   }
 
-  def advance(kind: String, key: String, watermark: String): Unit = {
-    import spark.implicits._
-    advance(Seq((kind, key, watermark)).toDF("kind", "key", "watermark"))
-  }
-
   /** Reset (reference `reboot.py:21-24` / `API_manager.py:211-222`). */
   def reset(): Unit =
     graft.core.Fs.delete(spark, path)
+
+  /** The stored lines in file order; a key stored twice keeps its later
+    * watermark. */
+  private def entries(): mutable.LinkedHashMap[(String, String), String] = {
+    val m = mutable.LinkedHashMap.empty[(String, String), String]
+    graft.core.Fs.readString(spark, path).foreach(_.linesIterator.filter(_.trim.nonEmpty)
+      .foreach { line =>
+        val n = Json.readTree(line)
+        keepLater(m, (n.get("kind").asText(), n.get("key").asText()), n.get("watermark").asText())
+      })
+    m
+  }
 }
 
 object StateStore {
   /** Full-backfill sentinel (`API_manager.py:77-78,91`), ISO-normalized. */
   val Sentinel = "1990-01-01"
 
-  private def jstr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+  private val Json = new ObjectMapper()
+
+  /** The monotone rule: a key's watermark only moves forward (ISO dates
+    * order as strings). */
+  private def keepLater(m: mutable.Map[(String, String), String],
+      k: (String, String), w: String): Unit =
+    m.updateWith(k)(old => Some(old.filter(_ > w).getOrElse(w))): Unit
 }

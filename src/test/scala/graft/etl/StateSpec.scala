@@ -44,4 +44,19 @@ class StateSpec extends SparkSpec {
     val st2 = new StateStore(spark, p) // fresh handle, re-read from disk
     assert(st2.watermark("Market", "NASDAQ") === "2024-06-04")
   }
+
+  test("keys with quotes, backslashes and control characters round-trip") {
+    val p = tmpDir("state") + "/state.json"
+    val st = new StateStore(spark, p)
+    val keys = Seq("say \"hi\"", "back\\slash", "bell\u0007", "new\nline", "plain")
+    keys.zipWithIndex.foreach { case (k, i) => st.advance("Stock", k, f"2024-06-${i + 1}%02d") }
+    val want = keys.zipWithIndex.map { case (k, i) => k -> f"2024-06-${i + 1}%02d" }.toMap
+    val fresh = new StateStore(spark, p) // re-read from disk
+    keys.foreach { k =>
+      assert(st.watermark("Stock", k) === want(k))
+      assert(fresh.watermark("Stock", k) === want(k))
+    }
+    val loaded = fresh.load().collect().map(r => (r.getString(0), r.getString(1), r.getString(2)))
+    assert(loaded.toSet === want.map { case (k, w) => ("Stock", k, w) }.toSet)
+  }
 }

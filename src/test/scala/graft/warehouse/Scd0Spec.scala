@@ -7,6 +7,10 @@ class Scd0Spec extends SparkSpec {
 
   private def df(keys: (String, Int)*) = keys.toSeq.toDF("k", "v")
 
+  private def parquetFiles(dir: String): Set[String] =
+    Option(new java.io.File(dir).list()).map(_.toSet).getOrElse(Set.empty[String])
+      .filter(_.endsWith(".parquet"))
+
   test("empty warehouse: everything inserts") {
     val stage = df("a" -> 1, "b" -> 2)
     val empty = stage.filter(org.apache.spark.sql.functions.lit(false))
@@ -41,5 +45,33 @@ class Scd0Spec extends SparkSpec {
     assert(Scd0.mergeAppend(batch, path, "k") === 3)
     assert(Scd0.mergeAppend(batch, path, "k") === 0)
     assert(spark.read.parquet(path).count() === 3)
+  }
+
+  test("single-key merges publish exactly one parquet file each") {
+    // the delta is hash-partitioned by the dedup; keys that land off
+    // partition 0 must not drag partition 0's empty file along
+    val path = tmpDir("wh") + "/t"
+    ('a' to 'l').map(_.toString).zipWithIndex.foreach { case (k, i) =>
+      val before = parquetFiles(path)
+      assert(Scd0.mergeAppend(df(k -> i), path, "k") === 1L)
+      assert((parquetFiles(path) -- before).size === 1, s"merge of key $k")
+    }
+    assert(spark.read.parquet(path).count() === 12)
+  }
+
+  test("an empty delta publishes nothing") {
+    val path = tmpDir("wh") + "/t"
+    Scd0.mergeAppend(df("a" -> 1, "b" -> 2), path, "k")
+    val before = parquetFiles(path)
+    assert(Scd0.mergeAppend(df("b" -> 3), path, "k") === 0L)
+    assert(parquetFiles(path) === before)
+    assert(!new java.io.File(Scd0.stagingPath(path)).exists())
+  }
+
+  test("an empty delta does not create the warehouse directory") {
+    val path = tmpDir("wh") + "/t"
+    assert(Scd0.mergeAppend(df(), path, "k") === 0L)
+    assert(!new java.io.File(path).exists())
+    assert(!new java.io.File(Scd0.stagingPath(path)).exists())
   }
 }

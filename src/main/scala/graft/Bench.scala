@@ -1,7 +1,10 @@
 package graft
 
+import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
 import graft.core.GraftSession
-import graft.queries.Registry
+import graft.queries.{Gated, Registry}
 
 /** Benchmark main: times the headline gated queries on
   * `SPARK_GRAFT_SF_DIR`, printing one JSON line the driver collects into
@@ -44,14 +47,36 @@ object Bench {
       s.split(" ")(0).toDouble
     } catch { case _: Throwable => -1.0 }
 
-  /** full JSON string escape — exception messages carry newlines, and a
+  /** JSON string literal — exception messages carry newlines, and a
     * control char would split the single machine-readable bench line */
-  private def jstr(s: String) = "\"" + s.flatMap {
-    case '\\' => "\\\\"
-    case '"' => "\\\""
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
+  private val Json = new ObjectMapper()
+  private def jstr(s: String) = Json.writeValueAsString(s)
+
+  /** Full materialization of every row of `df`: the noop sink — a bare
+    * count() would let Catalyst prune the projections being measured. */
+  def sink(df: DataFrame): Unit =
+    df.write.mode("overwrite").format("noop").save()
+
+  /** The timed unit: build the gate's frame, then [[sink]] it. */
+  def runGate(spark: SparkSession, g: Gated, dir: String): Unit =
+    sink(g.df(spark, dir))
+
+  /** Drop EVERY block a previous run left in the executor store: the
+    * catalog cache (persist) AND the localCheckpoint RDDs, which
+    * `clearCache()` does not see — they only die when the ContextCleaner
+    * gets around to their GC'd references. Measured (r19): under the
+    * query-major pass order all 3 samples of the early-registry gates
+    * landed in the post-warm-up window while ~256 gates' checkpoint
+    * blocks still occupied unified memory, and the squeezed execution
+    * side spilled — q8_rolling_mean timed 7.82 s in the full run vs
+    * 0.88 s isolated (q9 1.68 vs 0.17, q12 1.26 vs 0.22). Explicit
+    * blocking unpersist makes every sample start from the same empty
+    * block store, which is what "cold-cache steady state" meant. */
+  def quiesce(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = true))
+  }
 
   /** Oracle pairing stamp (r18 verdict item 2): the committed
     * BENCH_quiet_r18.json carried ratio=1.0021 computed against an oracle
@@ -189,26 +214,6 @@ object Bench {
       }
     }))
 
-    // noop sink: full materialization of every output row — a bare count()
-    // would let Catalyst prune the projections being measured
-    def run(g: graft.queries.Gated, dir: String): Unit =
-      g.df(spark, dir).write.mode("overwrite").format("noop").save()
-    /** Drop EVERY block a previous run left in the executor store: the
-      * catalog cache (persist) AND the localCheckpoint RDDs, which
-      * `clearCache()` does not see — they only die when the ContextCleaner
-      * gets around to their GC'd references. Measured (r19): under the
-      * query-major pass order all 3 samples of the early-registry gates
-      * landed in the post-warm-up window while ~256 gates' checkpoint
-      * blocks still occupied unified memory, and the squeezed execution
-      * side spilled — q8_rolling_mean timed 7.82 s in the full run vs
-      * 0.88 s isolated (q9 1.68 vs 0.17, q12 1.26 vs 0.22). Explicit
-      * blocking unpersist makes every sample start from the same empty
-      * block store, which is what "cold-cache steady state" meant. */
-    def quiesce(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-    }
     // warm-up: one discarded pass on the TARGET sf — primes JIT, codegen
     // cache, parquet footer cache, and one-time artifacts (q35's trained
     // IVF centroids), so timed passes measure steady-state serving, not
@@ -225,21 +230,21 @@ object Bench {
     headline.foreach { g =>
       val t0 = System.nanoTime()
       try {
-        run(g, sfDir)
+        runGate(spark, g, sfDir)
         warmSecs(g.name) = (System.nanoTime() - t0) / 1e9
       } catch { case _: Throwable => () }
-      quiesce()
+      quiesce(spark)
     }
 
-    def timeOnce(g: graft.queries.Gated): Either[String, Double] = {
+    def timeOnce(g: Gated): Either[String, Double] = {
       // leftover persisted intermediates (q47's curation barriers, q57's
       // history generations, q65's decode cache) would otherwise hand
       // their cache to the next run via canonical-plan matching — the
       // median must time cold-cache steady state, not cache hits
-      quiesce()
+      quiesce(spark)
       val t0 = System.nanoTime()
       try {
-        run(g, sfDir)
+        runGate(spark, g, sfDir)
         Right((System.nanoTime() - t0) / 1e9)
       } catch {
         case e: Throwable =>
@@ -257,7 +262,7 @@ object Bench {
     /** One adaptive sampling round: 3 runs, extended to at most 5 while
       * the observed spread (max/min − 1) exceeds 5%. Returns the raw
       * outcomes in run order. */
-    def sampleRound(g: graft.queries.Gated): Vector[Either[String, Double]] = {
+    def sampleRound(g: Gated): Vector[Either[String, Double]] = {
       val runs = scala.collection.mutable.Buffer.empty[Either[String, Double]]
       while (runs.size < 3) runs += timeOnce(g)
       def spreadHigh: Boolean = {

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import com.fasterxml.jackson.databind.ObjectMapper
+
 import graft.core.GraftSession
 
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -14,6 +16,9 @@ object Verify {
     val (sfDir, outDir, only) = args match {
       case Array(s, o)       => (s, o, None)
       case Array(s, o, sub)  => (s, o, Some(sub.split(',').toSet))
+      case _ =>
+        System.err.println("usage: graft.Verify <sfDir> <outDir> [gate,...]")
+        sys.exit(2)
     }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     // same corpus-sized session as Bench: the correctness gate then
@@ -35,22 +40,16 @@ object Verify {
       // query by query and the later gates pay eviction churn
       spark.catalog.clearCache()
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
+    // Jackson escapes backslash, quote and ALL control chars — a tab or CR
+    // in an oracle SQL string would otherwise break the JSON reader of the
+    // correctness check
+    val json = new ObjectMapper()
+    val sql = json.createObjectNode()
+    SparkEntry.oracleSql
       .filter { case (k, _) => only.forall(_.contains(k)) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+      .foreach { case (k, v) => sql.put(k, v) }
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      json.writeValueAsString(sql))
     spark.stop()
   }
 }

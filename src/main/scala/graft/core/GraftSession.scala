@@ -19,12 +19,9 @@ object GraftSession {
       .appName(appName)
       // native functions + the as-of join planner strategy, SQL-visible
       .withExtensions(new graft.GraftExtensions)
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("GRAFT_SHUFFLE_PARTITIONS", math.max(cores, 8).toString))
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("GRAFT_AQE", "true"))
-      .config("spark.sql.constraintPropagation.enabled",
-        sys.env.getOrElse("GRAFT_CONSTRAINT_PROP", "true"))
+      .config("spark.sql.shuffle.partitions", math.max(cores, 8).toString)
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.constraintPropagation.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       // AQE coalescing is byte-based; the text/dedup kernels are
       // compute-bound (md5 per shingle), so the default 1 MiB floor
@@ -40,8 +37,7 @@ object GraftSession {
       // filter BUILD costs more than it saves below ~10M-row fact sides
       // (measured +8% on the sf0.1 bench), so off for local; flip on for
       // cluster deployments
-      .config("spark.sql.optimizer.runtime.bloomFilter.enabled",
-        sys.env.getOrElse("GRAFT_RUNTIME_BLOOM", "false"))
+      .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "false")
       // push MIN/MAX/COUNT straight to parquet footers (e.g., the
       // scalar max-date subquery scans metadata, not data)
       .config("spark.sql.parquet.aggregatePushdown", "true")
@@ -53,10 +49,8 @@ object GraftSession {
       // 32 s sf0.1 total — the warm-up pass primed a cache that then
       // evicted itself). Static conf: takes effect on the first session
       // built in the JVM. 10k entries ≈ tens of MB of classes, noise
-      // against executor heap at any scale. Env override exists only for
-      // in-process A/B measurement (tools/Scratch) — prod default stands.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("GRAFT_CODEGEN_CACHE", "10000"))
+      // against executor heap at any scale.
+      .config("spark.sql.codegen.cache.maxEntries", "10000")
       .config("spark.ui.enabled", "false")
       // the corpus `events.ts` is parquet TIMESTAMP(NANOS), which Spark 4
       // rejects by default; read as long and convert in Tables.events
@@ -96,21 +90,19 @@ object GraftSession {
     *    non-null by corpus contract — dead filters semantically (the join
     *    drops null keys either way; the oracle gate runs under this conf
     *    and stays green). On a 100 TB warehouse with nullable keys the
-    *    inference can prune real IO, so [[local]]/[[builder]] keep it ON;
-    *    flip GRAFT_CONSTRAINT_PROP to re-enable here.
+    *    inference can prune real IO, so [[local]]/[[builder]] keep it ON.
     *  - `spark.sql.adaptive.enabled=false`: AQE materializes every
     *    exchange as a query stage and re-plans between stages — driver
     *    round-trips that cost more than they can recover when every
     *    shuffle is a few MB and no re-planning decision (coalesce beyond
     *    the static width, skew split, join demotion) ever fires (measured
     *    −2 s over the 74 gated queries, 6 interleaved sweeps). At real
-    *    scale those decisions carry the job, so [[local]] keeps AQE ON;
-    *    flip GRAFT_AQE to re-enable here.
+    *    scale those decisions carry the job, so [[local]] keeps AQE ON.
     *
     *    sf1 re-measurement (r15): at 10× data the trade is no longer
     *    one-sided. The graph-join family WANTS AQE's skew/coalesce
-    *    decisions (QuickBench medians at sf1: q143 5.07→1.98 s, q149
-    *    7.24→2.05 s, q170 2.68→1.67 s with GRAFT_AQE=true), while the
+    *    decisions (medians at sf1: q143 5.07→1.98 s, q149
+    *    7.24→2.05 s, q170 2.68→1.67 s with AQE on), while the
     *    q244 composition pipeline pays 3.5× FOR it (12.5→43.4 s — its
     *    dozens of tiny exchanges across eight persisted stages each
     *    become a blocking stage + driver re-plan, a local-mode cost
@@ -130,12 +122,9 @@ object GraftSession {
     val bytes = size(new java.io.File(dataDir))
     val sp = math.min(math.max(bytes / (2L << 20), 8L), cores.toLong)
     val spark = builder(appName, cores)
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("GRAFT_SHUFFLE_PARTITIONS", sp.toString))
-      .config("spark.sql.constraintPropagation.enabled",
-        sys.env.getOrElse("GRAFT_CONSTRAINT_PROP", "false"))
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("GRAFT_AQE", "false"))
+      .config("spark.sql.shuffle.partitions", sp.toString)
+      .config("spark.sql.constraintPropagation.enabled", "false")
+      .config("spark.sql.adaptive.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

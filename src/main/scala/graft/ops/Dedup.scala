@@ -999,57 +999,39 @@ object Dedup {
     var labels = ckpt(sym.select(col("src").as("id")).distinct()
       .select(col("id"), col("id").as("rep")))
     /** One min-label propagation step (1-hop min + optional pointer jump)
-      * from the (id, rep [, old]) mapping `l`; an `old` column, if
-      * present, is carried through untouched (the generation's change
-      * test compares against the GENERATION start, not the sub-step). */
+      * from the (id, rep, old) mapping `l`; `old` is carried through
+      * untouched for the generation's change test. One step per
+      * generation: batching two steps between barriers measured slower on
+      * every CC-backed gate at sf0.1 (r20, 11.16→15.40 s over 9 gates) —
+      * these graphs converge in 1-2 steps, so a second pass over the full
+      * sym table costs more than the barrier job it saves. */
     def step(l: DataFrame): DataFrame = {
-      val keep = if (l.columns.contains("old")) Seq(col("old")) else Nil
       val nbrMin = sym
         .join(l.select(col("id").as("src"), col("rep")), Seq("src"))
         .groupBy(col("dst").as("id"))
         .agg(min(col("rep")).as("nrep"))
       val hop = l.withColumnRenamed("rep", "prev")
         .join(nbrMin, Seq("id"), "left")
-        .select(Seq(col("id"),
-          least(col("prev"), coalesce(col("nrep"), col("prev"))).as("rep1"))
-          ++ keep: _*)
-      if (!doubling) hop.select(Seq(col("id"), col("rep1").as("rep"))
-        ++ keep: _*)
+        .select(col("id"),
+          least(col("prev"), coalesce(col("nrep"), col("prev"))).as("rep1"),
+          col("old"))
+      if (!doubling) hop.select(col("id"), col("rep1").as("rep"), col("old"))
       else hop
         // pointer jump: follow the chosen rep to ITS previous rep —
         // min(rep1, rep(rep1)) at least halves the remaining path length
         .join(l.select(col("id").as("rep1"), col("rep").as("rep2")),
           Seq("rep1"), "left")
-        .select(Seq(col("id"),
-          least(col("rep1"), coalesce(col("rep2"), col("rep1"))).as("rep"))
-          ++ keep: _*)
+        .select(col("id"),
+          least(col("rep1"), coalesce(col("rep2"), col("rep1"))).as("rep"),
+          col("old"))
     }
-    // r20 MEASURED NEGATIVE: batching TWO propagation steps between
-    // barriers (GRAFT_CC_STEPS=2 — labels at exit identical, since
-    // min-label propagation is monotone and changed==0 over a batched
-    // generation iff every sub-step changed nothing) LOST the A/B on
-    // every CC-backed gate at sf0.1 — q62 1.08→1.72, q88 1.10→1.70,
-    // q205 1.09→1.83, q249 1.54→2.45, total over 9 gates 11.16→15.40 s.
-    // These graphs converge in 1-2 steps, so the batched generation's
-    // second pass (3 joins + an aggregate over the full sym table) is
-    // usually pure waste, and it costs more than the barrier job + driver
-    // round-trip it saves. Default stays 1; the env hook remains for
-    // re-measuring on topologies with genuinely deep components, where
-    // the arithmetic flips (`iter`/`rounds` count STEPS either way, so
-    // the O(log diameter) convergence evidence and maxIter contract are
-    // step-count-stable).
-    val stepsPerGen = sys.env.get("GRAFT_CC_STEPS").map(_.toInt)
-      .filter(_ >= 1).getOrElse(1)
     var changed = 1L
     var iter = 0
     while (changed > 0 && iter < maxIter) {
-      val gen = math.min(stepsPerGen, maxIter - iter)
-      var stepped = step(labels.withColumn("old", col("rep")))
-      for (_ <- 2 to gen) stepped = step(stepped)
       // the change count rides the checkpoint-materialization job as an
       // observed metric — one action per round, not two (round-6 wrong #4)
       val obs = new org.apache.spark.sql.Observation()
-      val next = ckpt(stepped.observe(obs,
+      val next = ckpt(step(labels.withColumn("old", col("rep"))).observe(obs,
         sum(when(col("rep") =!= col("old"), 1L).otherwise(0L)).as("changed")))
       // the metric arrives via the async listener bus; on the (never yet
       // observed) chance it doesn't, fall back to an explicit count over
@@ -1068,7 +1050,7 @@ object Dedup {
       org.apache.spark.sql.graft.Bridge.backingRdds(labels)
         .foreach(_.unpersist(false))
       labels = next.drop("old")
-      iter += gen
+      iter += 1
     }
     sym.unpersist()
     (labels, iter, changed == 0L)

@@ -58,7 +58,7 @@ object Graphs {
     * @param barrierEvery lineage-barrier cadence: a checkpoint every
     *                     this many rounds (never after the last).
     *                     `Int.MaxValue` disables barriers — measurement
-    *                     use only (see [[graft.tools.Scratch]])
+    *                     use only
     * @param reliable barrier durability, mirroring
     *                 [[Dedup.connectedComponents]]: `false` =
     *                 localCheckpoint (fast; blocks lost on executor
@@ -123,14 +123,13 @@ object Graphs {
       // aggregate and the contribution join), so the unbarriered plan
       // doubles per round — the q231 blowup shape. Fine at the gate's 3
       // rounds (8× a round's plan); past ~10 the analyzer, not the
-      // data, becomes the cost (Scratch-measured at sf0.001 — see the
-      // cadence note there). A localCheckpoint on a cadence caps the
-      // depth at 2^barrierEvery round-plans while adding zero barriers
-      // at ≤ barrierEvery rounds, so the q215 gate's bench cost is
-      // untouched; values are identical (the barrier only materializes
-      // the same integers), so the unrolled-CTE oracle needs no change
-      // (the ccWithRounds discipline, on a cadence instead of per
-      // generation).
+      // data, becomes the cost (measured at sf0.001). A localCheckpoint
+      // on a cadence caps the depth at 2^barrierEvery round-plans while
+      // adding zero barriers at ≤ barrierEvery rounds, so the q215
+      // gate's bench cost is untouched; values are identical (the barrier
+      // only materializes the same integers), so the unrolled-CTE oracle
+      // needs no change (the ccWithRounds discipline, on a cadence
+      // instead of per generation).
       if (i % barrierEvery == 0 && i < iterations)
         score = Lineage.barrier(score, reliable)
     }

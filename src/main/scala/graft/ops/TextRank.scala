@@ -398,7 +398,7 @@ object TextRank {
     // persist dedups execution, but every iteration's logical plan still
     // embeds the full corpus->tokenize->aggregate subtree, so Catalyst
     // re-analyzes/re-optimizes a 5-copy tree — measured ~0.5 s of driver
-    // gap per run at sf0.1 (Scratch: 2 jobs, jobSum ~1.0 s, gap ~0.54 s).
+    // gap per run at sf0.1 (2 jobs, ~1.0 s of job wall, ~0.54 s gap).
     // The eager localCheckpoint truncates the plan to a LogicalRDD leaf
     // that PRESERVES the repartition(src) clustering, so the per-round
     // join still needs no exchange on the edge side. The rank seed then

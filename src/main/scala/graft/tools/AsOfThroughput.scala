@@ -33,7 +33,8 @@ import graft.streaming.AsOfStream
   * emitted line carries `state_growth`, the 10×/1× ratio — O(active
   * keys) predicts ~1.0; an uncompacted dim prefix would predict ~10).
   * Output: ONE JSON line `{"metric":"asof_throughput", ...}` that
-  * tools/quiet_window_r19.sh collects into ASOF_THROUGHPUT_r19.json.
+  * `tools/quiet_window.sh <round>` (phase `asof`) collects into
+  * `ASOF_THROUGHPUT_<round>.json`.
   */
 object AsOfThroughput {
 

@@ -1,0 +1,115 @@
+package graft.tools
+
+import java.nio.file.{Files, Paths}
+
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{FormattedMode, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+
+import graft.Bench
+import graft.core.{GraftSession, Metrics}
+import graft.queries.{Gated, Registry}
+
+/** Where a gate's wall time goes, layer by layer. Per named gate: one
+  * warm-up, then [[Runs]] runs, each from a [[Bench.quiesce]]d block store
+  * like a bench sample, printing one line per run:
+  *
+  *  - `build_ms`, `build_jobs` — the gate function: driver-side plan
+  *    construction plus any eager barrier jobs it runs
+  *  - `analysis_ms` / `optimization_ms` / `planning_ms` — Catalyst phases
+  *    of the action's SQL executions
+  *  - `action_ms` — the [[Bench.sink]] materialization
+  *  - `jobs`, `stages`, `job_ms` — Spark jobs and stages the action ran,
+  *    and the wall time those jobs covered
+  *  - `gap_ms` — action − job: driver time between and around the jobs
+  *
+  * With `planDir`, also writes `<planDir>/<gate>.txt`: the formatted
+  * explain of the gate's frame, then its exchange and join counts.
+  *
+  * Usage: `tools/run_main.sh graft.tools.Trace <sfDir> <gate,...> [planDir]`
+  * under [[GraftSession.tunedLocal]] on `SPARK_GRAFT_CPUS` cores (default
+  * 32), the bench's session.
+  */
+object Trace {
+  val Runs = 3
+
+  final case class Run(gate: String, run: Int, buildMs: Double, buildJobs: Int,
+      phases: Map[String, Long], actionMs: Double, jobs: Int, stages: Int,
+      jobMs: Long) {
+    def gapMs: Double = actionMs - jobMs
+    def line: String = {
+      val ph = Seq("analysis", "optimization", "planning")
+        .map(p => s"${p}_ms=${phases.getOrElse(p, 0L)}").mkString(" ")
+      f"TRACE $gate%s run=$run%d build_ms=$buildMs%.1f build_jobs=$buildJobs%d " +
+        f"$ph%s action_ms=$actionMs%.1f jobs=$jobs%d stages=$stages%d " +
+        f"job_ms=$jobMs%d gap_ms=$gapMs%.1f"
+    }
+  }
+
+  private def timed[T](f: => T): (T, Double) = {
+    val t0 = System.nanoTime()
+    val r = f
+    (r, (System.nanoTime() - t0) / 1e6)
+  }
+
+  /** One warm-up of `g`, then [[Runs]] traced runs. */
+  def runs(spark: SparkSession, m: Metrics, g: Gated, sfDir: String): Seq[Run] = {
+    Bench.runGate(spark, g, sfDir)
+    (1 to Runs).map { i =>
+      Bench.quiesce(spark)
+      val (df, buildMs) = m.named("build")(timed(g.df(spark, sfDir)))
+      val (_, actionMs) = m.named("action")(timed(Bench.sink(df)))
+      val b = m("build").get
+      val a = m("action").get
+      Run(g.name, i, buildMs, b.jobs, a.phases, actionMs, a.jobs, a.stages, a.jobMs)
+    }
+  }
+
+  /** Every physical node of `p`, through AQE wrappers and subqueries. */
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+    case q: QueryStageExec => nodes(q.plan)
+    case _ => (p.children ++ p.subqueries).flatMap(nodes)
+  })
+
+  /** Write `g`'s formatted explain and its exchange/join counts to
+    * `<dir>/<gate>.txt`; returns the summary line. */
+  def writePlan(spark: SparkSession, g: Gated, sfDir: String, dir: String): String = {
+    val qe = g.df(spark, sfDir).queryExecution
+    val counts = nodes(qe.executedPlan).map(_.nodeName)
+      .filter(n => n.contains("Exchange") || n.contains("Join") || n == "CartesianProduct")
+      .groupBy(identity).map { case (n, xs) => s"$n=${xs.size}" }.toSeq.sorted
+      .mkString(" ")
+    val path = Paths.get(dir, s"${g.name}.txt")
+    Files.createDirectories(path.getParent)
+    Files.writeString(path, qe.explainString(FormattedMode) + s"\n$counts\n")
+    s"PLAN ${g.name} $counts -> $path"
+  }
+
+  def main(args: Array[String]): Unit = {
+    val (sfDir, csv, planDir) = args match {
+      case Array(s, g)    => (s, g, None)
+      case Array(s, g, p) => (s, g, Some(p))
+      case _ =>
+        System.err.println("usage: graft.tools.Trace <sfDir> <gate,...> [planDir]")
+        sys.exit(2)
+    }
+    val gates = csv.split(',').toSeq.map { n =>
+      Registry.all.find(_.name == n).getOrElse {
+        System.err.println(s"unknown gate: $n")
+        sys.exit(2)
+      }
+    }
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.tunedLocal("graft-trace", sfDir, cpus)
+    spark.sparkContext.setLogLevel("ERROR")
+    val m = Metrics.install(spark)
+    try gates.foreach { g =>
+      runs(spark, m, g, sfDir).foreach(r => println(r.line))
+      planDir.foreach(d => println(writePlan(spark, g, sfDir, d)))
+    } finally {
+      m.close()
+      spark.stop()
+    }
+  }
+}

@@ -1,6 +1,7 @@
 package org.apache.spark.sql
 package graft
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.catalyst.expressions.Expression
 
 /** Column ↔ Expression bridge. Spark 4 scopes `ExpressionUtils` (and the
@@ -69,4 +70,17 @@ object Bridge {
   def endDurationNs(e: execution.ui.SparkListenerSQLExecutionEnd): Long = e.duration
   def endFailed(e: execution.ui.SparkListenerSQLExecutionEnd): Boolean =
     e.executionFailure.isDefined || e.errorMessage.exists(_.nonEmpty)
+
+  /** Job tags a job or stage was submitted under (its `spark.job.tags`
+    * property; the key is `private[spark]`). */
+  def jobTags(props: java.util.Properties): Set[String] =
+    Option(props).flatMap(p => Option(p.getProperty(SparkContext.SPARK_JOB_TAGS)))
+      .map(_.split(SparkContext.SPARK_JOB_TAGS_SEP).toSet).getOrElse(Set.empty)
+
+  /** Wait until every event posted so far reached the listeners, at most
+    * `timeoutMs`; returns on the timeout without throwing (the bus is
+    * `private[spark]`). */
+  def drainListenerBus(sc: SparkContext, timeoutMs: Long): Unit =
+    try sc.listenerBus.waitUntilEmpty(timeoutMs)
+    catch { case _: java.util.concurrent.TimeoutException => () }
 }

@@ -1,11 +1,26 @@
 package graft.core
 
+import org.scalatest.BeforeAndAfterEach
+
 import graft.SparkSpec
 
-class MetricsSpec extends SparkSpec {
+class MetricsSpec extends SparkSpec with BeforeAndAfterEach {
+
+  private val sfDir = "/root/testdata/sf0.001"
+  private val installed = scala.collection.mutable.Buffer.empty[Metrics]
+
+  /** A listener on the shared session, removed after the test. */
+  private def install(): Metrics = {
+    val m = Metrics.install(spark)
+    installed += m
+    m
+  }
+
+  override def afterEach(): Unit =
+    try installed.foreach(_.close()) finally { installed.clear(); super.afterEach() }
 
   test("listener captures scan metrics for a named action") {
-    val m = Metrics.install(spark)
+    val m = install()
     m.named("lineitem_count") {
       Tables.lineitem(spark, "/root/testdata/sf0.001")
         .write.mode("overwrite").format("noop").save()
@@ -22,7 +37,7 @@ class MetricsSpec extends SparkSpec {
   }
 
   test("concurrent named scopes attribute to the right names") {
-    val m = Metrics.install(spark)
+    val m = install()
     val sf = "/root/testdata/sf0.001"
     def run(name: String, table: String): Thread = {
       val t = new Thread(() =>
@@ -46,7 +61,7 @@ class MetricsSpec extends SparkSpec {
   }
 
   test("failing scoped action returns promptly, not after the full deadline") {
-    val m = Metrics.install(spark)
+    val m = install()
     val t0 = System.currentTimeMillis()
     intercept[RuntimeException] {
       m.named("boom")(throw new RuntimeException("driver-side failure"))
@@ -57,7 +72,7 @@ class MetricsSpec extends SparkSpec {
   }
 
   test("driver-only scoped action (no SQL execution) returns promptly") {
-    val m = Metrics.install(spark)
+    val m = install()
     val t0 = System.currentTimeMillis()
     val r = m.named("pure")(21 * 2)
     assert(r === 42)
@@ -65,7 +80,7 @@ class MetricsSpec extends SparkSpec {
   }
 
   test("reused scope name waits for the NEW snapshot, not the stale one") {
-    val m = Metrics.install(spark)
+    val m = install()
     val sf = "/root/testdata/sf0.001"
     def load(table: String): Unit = m.named("reused") {
       spark.read.parquet(s"$sf/$table.parquet")
@@ -74,5 +89,46 @@ class MetricsSpec extends SparkSpec {
     load("nation") // 25 rows
     load("region") // 5 rows — a stale-presence wait would still show 25
     assert(m("reused").get.rowsOut === 5)
+  }
+
+  test("a scope holding one parquet scan reports exactly 1 job") {
+    val m = install()
+    val df = spark.read.parquet(s"$sfDir/lineitem.parquet")
+    m.named("scan")(df.write.mode("overwrite").format("noop").save())
+    val snap = m("scan").get
+    assert(snap.jobs === 1)
+    assert(snap.stages === 1)
+    assert(snap.executions === 1)
+    assert(snap.jobMs >= 0)
+  }
+
+  test("an RDD-only scope counts its job with no SQL execution") {
+    val m = install()
+    val n = m.named("rdd")(spark.sparkContext.parallelize(1 to 100, 2).count())
+    assert(n === 100)
+    val snap = m("rdd").get
+    assert(snap.jobs === 1)
+    assert(snap.stages === 1)
+    assert(snap.executions === 0)
+    assert(snap.rowsOut === 0)
+  }
+
+  test("concurrent scopes do not cross-attribute job counts") {
+    val m = install()
+    val sc = spark.sparkContext
+    val df = spark.read.parquet(s"$sfDir/nation.parquet")
+    val start = new java.util.concurrent.CountDownLatch(1)
+    def run(name: String)(f: => Unit): Thread = {
+      val t = new Thread(() => { start.await(); m.named(name)(f) })
+      t.start(); t
+    }
+    val threads = Seq(
+      run("one_job")(df.write.mode("overwrite").format("noop").save()),
+      run("three_jobs")((1 to 3).foreach(_ => sc.parallelize(1 to 10, 2).count(): Unit)))
+    start.countDown()
+    threads.foreach(_.join(30000))
+    assert(m("one_job").map(_.jobs) === Some(1))
+    assert(m("three_jobs").map(_.jobs) === Some(3))
+    assert(m("three_jobs").get.executions === 0)
   }
 }

@@ -1,10 +1,7 @@
 package graft.etl
 
-import org.apache.spark.graft.TestHooks
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-
 import graft.SparkSpec
-import graft.core.Schemas
+import graft.core.{Metrics, Schemas}
 import graft.queries.LastPrice
 import graft.warehouse.Scd0
 
@@ -33,26 +30,13 @@ class PipelineSpec extends SparkSpec {
   }
 
   /** The value of `f` and the number of Spark jobs it ran, counted by a
-    * listener that only sees jobs carrying a tag set on this thread (the
-    * way `core.Metrics` scopes an action). */
+    * `core.Metrics` scope (job-tag attribution: only this thread's jobs). */
   private def jobsOf[T](f: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val tag = s"pipeline-spec-${java.util.UUID.randomUUID()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (TestHooks.jobTags(e.properties).contains(tag)) jobs.incrementAndGet(): Unit
-    }
-    sc.addSparkListener(listener)
-    sc.addJobTag(tag)
+    val m = Metrics.install(spark)
     try {
-      val r = f
-      TestHooks.drainListenerBus(sc)
-      (r, jobs.get)
-    } finally {
-      sc.removeJobTag(tag)
-      sc.removeSparkListener(listener)
-    }
+      val r = m.named("jobsOf")(f)
+      (r, m("jobsOf").get.jobs)
+    } finally m.close()
   }
 
   /** Run `f` under the static planner of `GraftSession.tunedLocal` (the

@@ -1,24 +1,29 @@
 #!/bin/bash
-# Quiet-window artifact cutter (r20). Phase-gating discipline as r17/r19
-# (wait for host load1 below threshold BEFORE each phase, retry up to 3x
-# if the end-of-phase load shows co-tenant pollution), with the r19
-# verdict fixes:
+# Quiet-window artifact cutter for one round. Phase gating: wait for host
+# load1 below threshold BEFORE each phase, retry up to 3x if the
+# end-of-phase load shows co-tenant pollution. Two rules:
 #   KEEP-BEST, NOT KEEP-LAST — every attempt lands in a tmp file and the
 #   kept artifact is the BEST attempt (lowest oracle total / lowest bench
 #   total: pollution only ever inflates, so lowest == cleanest), never
-#   whichever attempt happened to run last. The r19 log line "oracle kept
-#   LAST attempt despite pollution" is the bug this kills: a polluted
-#   late attempt can no longer shadow a clean early one.
+#   whichever attempt happened to run last: a polluted late attempt can
+#   never shadow a clean early one.
 #   ORACLE BEFORE BENCH — graft.Bench stamps the oracle file's
 #   total+mtime+sha into its own line at emit time, so the pairing in
-#   BENCH_quiet_r20.json is self-consistent by construction.
-#   tools/quiet_window_r20.sh [threshold] [phases]
-# phases: comma list of oracle,bench,growth,asof (default bench)
+#   BENCH_quiet_<round>.json is self-consistent by construction.
+#   tools/quiet_window.sh <round> [threshold] [phases]
+# round: artifact tag, e.g. r21 (writes QUIET_WINDOW_r21.log,
+# BENCH_quiet_r21.json, ...)
+# phases: comma list of oracle,bench,bench8,growth,asof (default bench)
 set -u
-THRESH=${1:-1.0}
-PHASES=${2:-bench}
-LOG=QUIET_WINDOW_r20.log
-SQL=/tmp/gv_full_r20/oracle_sql.json
+if [ $# -lt 1 ]; then
+  echo "usage: tools/quiet_window.sh <round> [threshold] [phases]" >&2
+  exit 2
+fi
+ROUND=$1
+THRESH=${2:-1.0}
+PHASES=${3:-bench}
+LOG=QUIET_WINDOW_$ROUND.log
+SQL=/tmp/gv_full_$ROUND/oracle_sql.json
 
 load1() { cut -d' ' -f1 /proc/loadavg; }
 stamp() { echo "[$(date +%H:%M:%S) load=$(load1)] $*" | tee -a "$LOG"; }
@@ -76,7 +81,7 @@ run_phase() {
     wait_quiet
     STARTL=$(load1)
     stamp "$NAME attempt $ATTEMPT starting (load $STARTL)"
-    ATTEMPT_OUT=$(mktemp /tmp/qw20_XXXX.json)
+    ATTEMPT_OUT=$(mktemp "/tmp/qw_${ROUND}_XXXX.json")
     export ATTEMPT_OUT
     "$@"
     ENDL=$(load1)
@@ -108,18 +113,18 @@ phase_bench() {
     2>&1 | grep '"metric"' | sed 's/^\[info\] //' > "$ATTEMPT_OUT"
 }
 
-# bench8: the same full-registry bench at 8 cores (VERDICT r19 item 7) —
-# the committed 8c/32c pair makes core-sensitivity regressions visible
-# in the repo's own evidence before the driver cuts its own 8-core line.
+# bench8: the same full-registry bench at 8 cores — the committed 8c/32c
+# pair makes core-sensitivity regressions visible in the repo's own
+# evidence.
 phase_bench8() {
   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=8 \
     sbt -batch 'runMain graft.Bench' \
     2>&1 | grep '"metric"' | sed 's/^\[info\] //' > "$ATTEMPT_OUT"
 }
 
-# growth: r20 gate subset at each SF (bench subset protocol — "only" +
-# "subset_sum", no total/ratio). Subset runs have no "value"; keep-best
-# keys on subset_sum.
+# growth: the round's gate subset at each SF (bench subset protocol —
+# "only" + "subset_sum", no total/ratio). Subset runs have no "value";
+# keep-best keys on subset_sum.
 GROWTH_GATES=${GROWTH_GATES:-q244_curation_pipeline,q250_winnowing}
 phase_growth_sf01() {
   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_ONLY=$GROWTH_GATES \
@@ -133,25 +138,25 @@ phase_growth_sf1() {
 }
 
 # asof: AsOfStream.enrichPrior throughput/state lines at 1x and 10x
-# event volume (verdict r19 item 6) — graft.tools.AsOfThroughput emits
-# one JSON line per volume; keep-best keys on total wall seconds.
+# event volume — graft.tools.AsOfThroughput emits one JSON line per
+# volume; keep-best keys on total wall seconds.
 phase_asof() {
   sbt -batch 'runMain graft.tools.AsOfThroughput' \
     2>&1 | grep '"metric"' | sed 's/^\[info\] //' > "$ATTEMPT_OUT"
 }
 
-# End-load bounds per the r19 recalibration: a saturating local[32] phase
-# ends at load1 5-17 BY ITSELF; the bound only catches co-tenant storms.
+# End-load bounds: a saturating local[32] phase ends at load1 5-17 BY
+# ITSELF; the bound only catches co-tenant storms.
 case ",$PHASES," in *,oracle,*)
   run_phase oracle 6.0 ORACLE_BENCH.json total_s phase_oracle ;; esac
 case ",$PHASES," in *,bench,*)
-  run_phase bench 6.0 BENCH_quiet_r20.json value phase_bench ;; esac
+  run_phase bench 6.0 "BENCH_quiet_$ROUND.json" value phase_bench ;; esac
 case ",$PHASES," in *,bench8,*)
-  run_phase bench8 4.0 BENCH_quiet8_r20.json value phase_bench8 ;; esac
+  run_phase bench8 4.0 "BENCH_quiet8_$ROUND.json" value phase_bench8 ;; esac
 case ",$PHASES," in *,growth,*)
-  run_phase growth_sf01 6.0  GROWTH_sf01_r20.json subset_sum phase_growth_sf01
-  run_phase growth_sf1  18.0 GROWTH_sf1_r20.json  subset_sum phase_growth_sf1 ;; esac
+  run_phase growth_sf01 6.0  "GROWTH_sf01_$ROUND.json" subset_sum phase_growth_sf01
+  run_phase growth_sf1  18.0 "GROWTH_sf1_$ROUND.json"  subset_sum phase_growth_sf1 ;; esac
 case ",$PHASES," in *,asof,*)
-  run_phase asof 8.0 ASOF_THROUGHPUT_r20.json total_s phase_asof ;; esac
+  run_phase asof 8.0 "ASOF_THROUGHPUT_$ROUND.json" total_s phase_asof ;; esac
 
 stamp "all phases complete"

@@ -1,6 +1,12 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
+import java.util.concurrent.Executors
+import java.util.concurrent.atomic.AtomicReference
+
+import scala.util.Try
+
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession, classic}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 
 import graft.core.Schemas
@@ -43,10 +49,17 @@ class JsonDirSource(spark: SparkSession, dir: String) extends QuoteSource {
 }
 
 /** End-to-end pipeline orchestrator (reference `main.py:49-102`):
-  * extract → transform → lake → stage → SCD-0 warehouse merge, with the
+  * extract → transform → stage → lake ∥ SCD-0 warehouse merge, with the
   * incremental-state contract of SURVEY §2.9: watermark read before
-  * extract, advanced only after a successful sink write; replays are
+  * extract, advanced only after every sink write succeeded; replays are
   * deduped by the key anti-join, so the whole chain is effectively-once.
+  *
+  * Each run reads its extract exactly once, into the stage; the lake and
+  * the warehouse are both written from the stage read back, so they
+  * cannot see two different versions of a source that changes between
+  * reads. Both sinks are idempotent (dynamic partition overwrite, key
+  * anti-join) and independent of each other, so they run at the same
+  * time: the lake write on a worker thread, the merge on the caller's.
   */
 class Pipeline(
     spark: SparkSession,
@@ -61,59 +74,91 @@ class Pipeline(
   def marketsWarehousePath: String = s"$warehouseRoot/markets"
 
   /** Incremental per-ticker extraction (reference E1+E2 chained):
-    * watermark+1day as from-date, transform, lake write, stage overwrite,
-    * anti-join merge, then monotone state advance. Returns rows inserted.
-    * The batch's row count and max date ride the lake write as observed
-    * metrics: the three writes and the merge's key broadcast are the only
-    * Spark jobs. */
+    * watermark+1day as from-date, transform, stage overwrite, then the
+    * lake write and the anti-join merge at the same time, then monotone
+    * state advance. Returns rows inserted.
+    *
+    * The batch's row count and max date ride the stage write as observed
+    * metrics: the stage write, the lake write, and the merge's key
+    * broadcast and delta write are the only Spark jobs. If either sink
+    * fails, the call waits for the other, then rethrows the first
+    * failure's own exception with the watermark unmoved; no job of the
+    * call is still running when it returns or throws. */
   def runStock(ticker: String): Long = {
     val wm = state.watermark("Stock", ticker)
     val from = java.time.LocalDate.parse(wm).plusDays(1).toString // F4
     val raw = graft.ops.Validate.requireSchema(
       source.eod(ticker, from), Schemas.eodRaw) // declared-schema contract (§1.2)
-    val prices = Transforms.transformStock(raw, ticker)
     val batch = Observation()
-    Lake.writeStocks(prices.observe(batch, count(lit(1)).as("rows"),
-      max(col("stock_date")).cast("string").as("max_date")), lakeRoot)
-    val m = observed(batch)
-    if (m.getLong(0) == 0L) return 0L // S5 empty-result short-circuit: no state move
-    val inserted = stageAndMerge(prices, "stage_stock_prices", stocksWarehousePath, "stock_key")
-    val newWm = m.getString(1)
-    if (newWm != null && newWm > wm) state.advance("Stock", ticker, newWm)
-    inserted
+    load(Transforms.transformStock(raw, ticker).observe(batch, count(lit(1)).as("rows"),
+        max(col("stock_date")).cast("string").as("max_date")),
+      batch, "stage_stock_prices", Lake.writeStocks, stocksWarehousePath, "stock_key") { m =>
+      val newWm = m.getString(1)
+      if (newWm != null && newWm > wm) state.advance("Stock", ticker, newWm)
+    }
   }
 
   /** Full-refresh market extraction (reference: "LA EXTRACCION DE LOS
     * MERCADOS ES FULL", `main.py:22-23`); state date is informational. */
   def runMarket(exchange: String): Long = {
-    val raw = source.symbols(exchange)
     val batch = Observation()
     // counted before the common-stock filter: a listing of only funds
-    // still refreshes the stage and the state date
-    Lake.writeMarkets(Transforms.transformMarket(
-      raw.observe(batch, count(lit(1)).as("rows"))), lakeRoot)
-    if (observed(batch).getLong(0) == 0L) return 0L
-    val inserted = stageAndMerge(Transforms.transformMarket(raw), "stage_markets",
-      marketsWarehousePath, "market_stockid")
-    state.advance("Market", exchange, java.time.LocalDate.now().toString)
-    inserted
+    // still advances the state date
+    load(Transforms.transformMarket(
+        source.symbols(exchange).observe(batch, count(lit(1)).as("rows"))),
+      batch, "stage_markets", Lake.writeMarkets, marketsWarehousePath, "market_stockid") { _ =>
+      state.advance("Market", exchange, java.time.LocalDate.now().toString)
+    }
   }
 
-  /** Stage overwrite, then the SCD-0 merge of the stage read back with the
-    * schema just written. */
-  private def stageAndMerge(df: DataFrame, stage: String, warehousePath: String,
-      key: String): Long = {
+  /** Stage overwrite of `df` (the one read of the extract, observed by
+    * `batch`), the S5 empty-result short-circuit (nothing past the stage
+    * written, no state move), both sinks from the stage read back with
+    * its declared schema, then `advance` with the observed metrics.
+    * Returns rows inserted. */
+  private def load(df: DataFrame, batch: Observation, stage: String,
+      lake: (DataFrame, String) => Unit, warehousePath: String, key: String)(
+      advance: Row => Unit): Long = {
     val stagePath = s"$warehouseRoot/$stage"
     Scd0.stageLoad(df, stagePath)
-    Scd0.mergeAppend(spark.read.schema(df.schema).parquet(stagePath), warehousePath, key)
+    val m = scala.concurrent.Await.result(batch.future,
+      scala.concurrent.duration.Duration(60, "s"))
+    if (m.getLong(0) == 0L) return 0L
+    val staged = spark.read.schema(df.schema).parquet(stagePath)
+    val inserted = Pipeline.alongside(spark)(lake(staged, lakeRoot))(
+      Scd0.mergeAppend(staged, warehousePath, key))
+    advance(m)
+    inserted
   }
-
-  /** Metrics observed on a write that has returned. */
-  private def observed(o: Observation): Row =
-    scala.concurrent.Await.result(o.future, scala.concurrent.duration.Duration(60, "s"))
 
   def warehouseStocks(): DataFrame =
     spark.read.schema(Schemas.stockPrices).parquet(stocksWarehousePath)
   def warehouseMarkets(): DataFrame =
     spark.read.schema(Schemas.markets).parquet(marketsWarehousePath)
+}
+
+object Pipeline {
+  /** Worker threads for the side sink; idle ones die after a minute. */
+  private val sideSinks = Executors.newCachedThreadPool { r =>
+    val t = new Thread(r, "pipeline-side-sink")
+    t.setDaemon(true)
+    t
+  }
+
+  /** Run `side` on a worker thread while `main` runs on the caller's, and
+    * return `main`'s value once both have finished. The worker starts
+    * through `SQLExecution.withThreadLocalCaptured` (as Spark's broadcast
+    * exchange does), so its jobs carry the caller's job tags and local
+    * properties. If either fails, the other is still waited for, then the
+    * first failure's own exception is rethrown. */
+  private def alongside[T](spark: SparkSession)(side: => Unit)(main: => T): T = {
+    val first = new AtomicReference[Throwable]
+    def failFirst[A](f: => A): A =
+      try f catch { case e: Throwable => first.compareAndSet(null, e); throw e }
+    val done = SQLExecution.withThreadLocalCaptured(
+      spark.asInstanceOf[classic.SparkSession], sideSinks)(failFirst(side))
+    val out = try Try(failFirst(main)) finally Try(done.join())
+    Option(first.get).foreach(e => throw e)
+    out.get
+  }
 }

@@ -1,16 +1,26 @@
 package graft.etl
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.datasources.json.JsonFileFormat
+import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.sql.util.QueryExecutionListener
+
 import graft.SparkSpec
 import graft.core.{Metrics, Schemas}
 import graft.queries.LastPrice
 import graft.warehouse.Scd0
 
 /** End-to-end replay of the reference's smoke scenario (`main.py:49-102`):
-  * two tickers + one exchange through extract → transform → lake → stage →
+  * two tickers + one exchange through extract → transform → stage → lake ∥
   * SCD-0 warehouse → last-price query; run twice to prove idempotence
   * (SURVEY §5.2 item 2).
   */
 class PipelineSpec extends SparkSpec {
+
+  /** Plan traversal that also descends into adaptive plans. */
+  private object AdaptivePlans extends AdaptiveSparkPlanHelper
 
   private def mkPipeline(root: String = tmpDir("pipe"),
       statePath: Option[String] = None): Pipeline =
@@ -114,12 +124,16 @@ class PipelineSpec extends SparkSpec {
       "retry duplicated lake rows")
   }
 
-  test("empty source: no partial writes, no state movement (S5 guard)") {
+  test("empty source: stage refreshed, lake/warehouse/state untouched (S5 guard)") {
+    // the stage is a truncate-and-load (DB_manager.py:107-136), so an
+    // empty batch leaves it holding 0 rows; nothing past it is written
     val p = mkPipeline()
     assert(p.runStock("EMPTY") === 0L)
     assert(p.state.watermark("Stock", "EMPTY") === StateStore.Sentinel)
     assert(!new java.io.File(p.stocksWarehousePath).exists())
     assert(dataFiles(p.lakeRoot).isEmpty, "empty extract added a lake data file")
+    assert(spark.read.schema(Schemas.stockPrices)
+      .parquet(s"${p.warehouseRoot}/stage_stock_prices").count() === 0L)
   }
 
   test("last-price parity: golden row + global-max-date quirk") {
@@ -161,22 +175,45 @@ class PipelineSpec extends SparkSpec {
     assert(fields(spark.read.parquet(p.marketsWarehousePath).schema) === fields(Schemas.markets))
   }
 
-  test("one-row incremental runStock runs at most 4 Spark jobs") {
+  // exactly, not at most: the stage write, the lake write (on the side
+  // thread, so a lake job escaping the caller's job tags would count 3),
+  // the merge's key broadcast and its delta write
+  test("one-row incremental runStock runs exactly 4 Spark jobs") {
     val p = mkPipeline()
     p.runStock("MSFT")
     p.state.advance("Stock", "AAPL", "2024-06-04") // one day left to extract
     val (inserted, jobs) = staticPlanner(jobsOf(p.runStock("AAPL")))
     assert(inserted === 1L)
-    assert(jobs <= 4, s"runStock ran $jobs jobs")
+    assert(jobs === 4, s"runStock ran $jobs jobs")
     assert(p.state.watermark("Stock", "AAPL") === "2024-06-05")
   }
 
-  test("runMarket with nothing new runs at most 4 Spark jobs") {
+  test("runMarket with nothing new runs exactly 4 Spark jobs") {
     val p = mkPipeline()
     p.runMarket("NASDAQ")
     val (inserted, jobs) = staticPlanner(jobsOf(p.runMarket("NASDAQ")))
     assert(inserted === 0L)
-    assert(jobs <= 4, s"runMarket ran $jobs jobs")
+    assert(jobs === 4, s"runMarket ran $jobs jobs")
+  }
+
+  test("runStock scans its JSON extract exactly once") {
+    // lake and warehouse both read the stage: a source that changed
+    // between two reads could not make them disagree
+    val p = mkPipeline()
+    val scans = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (AdaptivePlans.collect(qe.executedPlan) {
+          case s: FileSourceScanExec if s.relation.fileFormat.isInstanceOf[JsonFileFormat] => s
+        }.nonEmpty) scans.incrementAndGet(): Unit
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      assert(p.runStock("AAPL") === 3L)
+      Bridge.drainListenerBus(spark.sparkContext, 5000)
+    } finally spark.listenerManager.unregister(listener)
+    assert(scans.get === 1)
   }
 
   test("fault: a delta orphaned before its publish is invisible and the retry converges") {
@@ -217,5 +254,44 @@ class PipelineSpec extends SparkSpec {
     assert(p.runStock("AAPL") === 0L) // replayed, nothing new
     assert(p.warehouseStocks().count() === 3)
     assert(p.state.watermark("Stock", "AAPL") === "2024-06-05")
+  }
+
+  /** Block one sink of AAPL's first run with a regular file at `blocked`
+    * (relative to the pipeline root): the run throws that sink's own
+    * exception once the other sink is done, the watermark stays put, and
+    * the rerun after unblocking converges to a clean pipeline's lake,
+    * warehouse and state. */
+  private def sinkFault(blocked: String, sink: String): Unit = {
+    val root = tmpDir("pipe")
+    val p = mkPipeline(root)
+    val blocker = new java.io.File(s"$root/$blocked")
+    assert(blocker.getParentFile.mkdirs())
+    java.nio.file.Files.writeString(blocker.toPath, "not a directory")
+    val e = intercept[Exception](p.runStock("AAPL"))
+    // no job of the call may still run: drain the status store's events,
+    // then nothing is left active
+    Bridge.drainListenerBus(spark.sparkContext, 5000)
+    assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty)
+    assert(!e.isInstanceOf[java.util.concurrent.CompletionException])
+    assert(e.getStackTrace.exists(f => s"${f.getClassName}.${f.getMethodName}" == sink),
+      s"not thrown by $sink: $e")
+    assert(p.state.watermark("Stock", "AAPL") === StateStore.Sentinel)
+    assert(blocker.delete())
+    p.runStock("AAPL")
+    val clean = mkPipeline()
+    clean.runStock("AAPL")
+    def same(got: DataFrame, want: DataFrame) =
+      assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
+    same(Lake.readStocks(spark, p.lakeRoot), Lake.readStocks(spark, clean.lakeRoot))
+    same(p.warehouseStocks(), clean.warehouseStocks())
+    same(p.state.load(), clean.state.load())
+  }
+
+  test("fault: a failed lake write beside a good merge rethrows, state unmoved") {
+    sinkFault("lake/stocks", "graft.etl.Lake$.writeStocks")
+  }
+
+  test("fault: a failed merge beside a running lake write rethrows, state unmoved") {
+    sinkFault("wh/stock_prices", "graft.warehouse.Scd0$.mergeAppend")
   }
 }

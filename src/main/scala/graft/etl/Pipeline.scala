@@ -124,7 +124,12 @@ class Pipeline(
     val m = scala.concurrent.Await.result(batch.future,
       scala.concurrent.duration.Duration(60, "s"))
     if (m.getLong(0) == 0L) return 0L
-    val staged = spark.read.schema(df.schema).parquet(stagePath)
+    // the extract is one multiLine JSON body, which Spark does not split:
+    // one task wrote the stage as one file, and it reads back as one
+    // partition. coalesce(1) says so to the planner, so the merge's
+    // dropDuplicates runs inside the scan task instead of through a
+    // shuffle into spark.sql.shuffle.partitions tasks.
+    val staged = spark.read.schema(df.schema).parquet(stagePath).coalesce(1)
     val inserted = Pipeline.alongside(spark)(lake(staged, lakeRoot))(
       Scd0.mergeAppend(staged, warehousePath, key))
     advance(m)

@@ -77,6 +77,23 @@ object Bridge {
     Option(props).flatMap(p => Option(p.getProperty(SparkContext.SPARK_JOB_TAGS)))
       .map(_.split(SparkContext.SPARK_JOB_TAGS_SEP).toSet).getOrElse(Set.empty)
 
+  /** The state-store providers the stateful operators of `q`'s last
+    * micro-batch load: one per operator, partition and store name. */
+  def stateStoreProviders(q: streaming.StreamingQuery)
+      : Seq[execution.streaming.state.StateStoreProviderId] =
+    q.asInstanceOf[execution.streaming.runtime.StreamingQueryWrapper].streamingQuery
+      .lastExecution.executedPlan.collect {
+        case w: execution.streaming.operators.stateful.StateStoreWriter => w
+      }.flatMap { w =>
+        val info = w.getStateInfo
+        for (p <- 0 until info.numPartitions; name <- w.stateStoreNames)
+          yield execution.streaming.state.StateStoreProviderId(info, p, name)
+      }
+
+  /** Whether this JVM holds `id`'s provider (and its state) loaded. */
+  def stateStoreLoaded(id: execution.streaming.state.StateStoreProviderId): Boolean =
+    execution.streaming.state.StateStore.isLoaded(id)
+
   /** Wait until every event posted so far reached the listeners, at most
     * `timeoutMs`; returns on the timeout without throwing (the bus is
     * `private[spark]`). */

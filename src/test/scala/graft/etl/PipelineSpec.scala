@@ -39,13 +39,13 @@ class PipelineSpec extends SparkSpec {
     }
   }
 
-  /** The value of `f` and the number of Spark jobs it ran, counted by a
-    * `core.Metrics` scope (job-tag attribution: only this thread's jobs). */
-  private def jobsOf[T](f: => T): (T, Int) = {
+  /** The value of `f` and the `core.Metrics` snapshot of its scope
+    * (job-tag attribution: only this thread's jobs and stages). */
+  private def scoped[T](f: => T): (T, Metrics.Snapshot) = {
     val m = Metrics.install(spark)
     try {
-      val r = m.named("jobsOf")(f)
-      (r, m("jobsOf").get.jobs)
+      val r = m.named("scoped")(f)
+      (r, m("scoped").get)
     } finally m.close()
   }
 
@@ -177,23 +177,39 @@ class PipelineSpec extends SparkSpec {
 
   // exactly, not at most: the stage write, the lake write (on the side
   // thread, so a lake job escaping the caller's job tags would count 3),
-  // the merge's key broadcast and its delta write
+  // the merge's key broadcast and its delta write. One stage each: the
+  // stage reads back as one partition, so the merge's dropDuplicates runs
+  // inside the scan task, with no shuffle
   test("one-row incremental runStock runs exactly 4 Spark jobs") {
     val p = mkPipeline()
     p.runStock("MSFT")
     p.state.advance("Stock", "AAPL", "2024-06-04") // one day left to extract
-    val (inserted, jobs) = staticPlanner(jobsOf(p.runStock("AAPL")))
+    val (inserted, s) = staticPlanner(scoped(p.runStock("AAPL")))
     assert(inserted === 1L)
-    assert(jobs === 4, s"runStock ran $jobs jobs")
+    assert(s.jobs === 4, s"runStock ran ${s.jobs} jobs")
+    assert(s.stages === 4, s"runStock ran ${s.stages} stages")
     assert(p.state.watermark("Stock", "AAPL") === "2024-06-05")
+  }
+
+  test("a bulk runStock or runMarket publishes exactly 1 warehouse file") {
+    // without the single-partition read-back the delta is shuffled into
+    // spark.sql.shuffle.partitions tasks and published as up to one file
+    // per key; AQE would coalesce them, the static planner does not
+    val p = mkPipeline()
+    staticPlanner {
+      assert(p.runStock("AAPL") === 3L)
+      assert(p.runMarket("NASDAQ") === 2L)
+    }
+    assert(dataFiles(p.stocksWarehousePath).size === 1)
+    assert(dataFiles(p.marketsWarehousePath).size === 1)
   }
 
   test("runMarket with nothing new runs exactly 4 Spark jobs") {
     val p = mkPipeline()
     p.runMarket("NASDAQ")
-    val (inserted, jobs) = staticPlanner(jobsOf(p.runMarket("NASDAQ")))
+    val (inserted, s) = staticPlanner(scoped(p.runMarket("NASDAQ")))
     assert(inserted === 0L)
-    assert(jobs === 4, s"runMarket ran $jobs jobs")
+    assert(s.jobs === 4, s"runMarket ran ${s.jobs} jobs")
   }
 
   test("runStock scans its JSON extract exactly once") {

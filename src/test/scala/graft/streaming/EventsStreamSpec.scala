@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 
 import graft.SparkSpec
 import graft.core.Tables
@@ -52,6 +53,23 @@ class EventsStreamSpec extends SparkSpec {
     val loaded = spark.read.parquet(wh)
     assert(loaded.count() === n) // duplicates merged away
     assert(loaded.select("event_id").distinct().count() === n)
+  }
+
+  test("a finished deduped scd0 drain releases its state stores") {
+    // the session's 5 s state-store maintenance interval unloads the
+    // stores of a terminated query; at Spark's 60 s default they stay
+    // loaded, and on the heap, for up to a minute after the drain
+    val (dir, _) = mkSource()
+    val q = EventsStream.scd0Sink(EventsStream.deduped(EventsStream.read(spark, dir)),
+      tmpDir("release-wh") + "/events", tmpDir("release-ckpt"))
+    try q.awaitTermination() finally q.stop()
+    val ids = Bridge.stateStoreProviders(q)
+    assert(ids.nonEmpty)
+    val deadline = System.nanoTime() + 15L * 1000 * 1000 * 1000
+    while (ids.exists(Bridge.stateStoreLoaded) && System.nanoTime() < deadline)
+      Thread.sleep(100)
+    val loaded = ids.count(Bridge.stateStoreLoaded)
+    assert(loaded === 0, s"$loaded of ${ids.size} state stores still loaded after 15 s")
   }
 
   test("streaming dedup drops replayed events within the watermark") {

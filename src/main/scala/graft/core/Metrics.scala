@@ -10,9 +10,10 @@ import org.apache.spark.sql.graft.Bridge
 /** Observability (reference §2.11: row-count logs per load,
   * `DB_manager.py:125,136`): the one listener that measures this library.
   * Each [[Metrics#named]] scope records the Spark jobs, stages and job wall
-  * time submitted under it, and the rows, files, bytes and Catalyst phases
-  * of its SQL executions. Engine-native replacement for the reference's
-  * print statements; in production these feed structured logs/dashboards.
+  * time submitted under it, its tasks' deserialization and run time, and
+  * the rows, files, bytes and Catalyst phases of its SQL executions.
+  * Engine-native replacement for the reference's print statements; in
+  * production these feed structured logs/dashboards.
   *
   * Attribution rides on job tags, not shared mutable state: [[named]] tags
   * the calling thread with a tag unique to the call, Spark copies the tag
@@ -29,6 +30,7 @@ final class Metrics(spark: SparkSession) extends SparkListener with AutoCloseabl
   private val open = TrieMap.empty[String, Scope]
   private val jobScopes = TrieMap.empty[Int, (Seq[Scope], Long)]
   private val execScopes = TrieMap.empty[Long, Seq[Scope]]
+  private val stageScopes = TrieMap.empty[(Int, Int), Seq[Scope]]
 
   private def scopesOf(tags: Iterable[String]): Seq[Scope] =
     tags.iterator.flatMap(open.get).toSeq
@@ -46,8 +48,23 @@ final class Metrics(spark: SparkSession) extends SparkListener with AutoCloseabl
       ss.foreach(_.jobEnded(t0, e.time))
     }
 
-  override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
-    scopesOf(Bridge.jobTags(e.properties)).foreach(_.stage())
+  override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = {
+    val ss = scopesOf(Bridge.jobTags(e.properties))
+    if (ss.nonEmpty) {
+      stageScopes.put((e.stageInfo.stageId, e.stageInfo.attemptNumber()), ss): Unit
+      ss.foreach(_.stage())
+    }
+  }
+
+  // a stage completes after its tasks have ended: the bus is ordered
+  override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+    stageScopes.remove((e.stageInfo.stageId, e.stageInfo.attemptNumber())): Unit
+
+  override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+    for {
+      ss <- stageScopes.get((e.stageId, e.stageAttemptId))
+      tm <- Option(e.taskMetrics)
+    } ss.foreach(_.task(tm.executorDeserializeTime, tm.executorRunTime))
 
   override def onOtherEvent(event: SparkListenerEvent): Unit = event match {
     case s: SparkListenerSQLExecutionStart =>
@@ -112,6 +129,10 @@ object Metrics {
     * @param jobMs      wall time covered by the scope's jobs; overlapping
     *                   jobs (concurrent broadcasts) count once, so
     *                   scope wall − jobMs is the driver gap
+    * @param tasks      tasks those stages ran, failed attempts included
+    * @param taskDeserMs summed executor time spent deserializing those
+    *                   tasks (closure, partition, broadcast conf), ms
+    * @param taskRunMs  summed executor run time of those tasks, ms
     * @param executions SQL executions in the scope
     * @param phases     Catalyst phase ms (analysis, optimization,
     *                   planning) summed over the scope's executions
@@ -121,6 +142,7 @@ object Metrics {
     *                   one */
   final case class Snapshot(name: String, durationMs: Long, rowsOut: Long,
       filesRead: Long, bytesRead: Long, jobs: Int, stages: Int, jobMs: Long,
+      tasks: Int, taskDeserMs: Long, taskRunMs: Long,
       executions: Int, phases: Map[String, Long])
 
   /** Upper bound on the listener-bus drain that closes a scope. */
@@ -135,13 +157,19 @@ object Metrics {
   /** Accumulator of one open scope; written by the listener thread, read
     * by the scope's thread after the drain. */
   private final class Scope {
-    private var jobs, stages, executions = 0
+    private var jobs, stages, tasks, executions = 0
+    private var taskDeserMs, taskRunMs = 0L
     private var intervals = List.empty[(Long, Long)]
     private var last = Option.empty[Sql]
     private var phases = Map.empty[String, Long]
 
     def job(): Unit = synchronized { jobs += 1 }
     def stage(): Unit = synchronized { stages += 1 }
+    def task(deserMs: Long, runMs: Long): Unit = synchronized {
+      tasks += 1
+      taskDeserMs += deserMs
+      taskRunMs += runMs
+    }
     def jobEnded(startMs: Long, endMs: Long): Unit =
       synchronized { intervals ::= ((startMs, endMs)) }
     def execution(sql: Option[Sql]): Unit = synchronized {
@@ -161,7 +189,7 @@ object Metrics {
       val jobMs = merged.map { case (s, e) => e - s }.sum
       val s = last.getOrElse(Sql(0L, 0L, 0L, 0L, Map.empty))
       Snapshot(name, s.durationMs, s.rows, s.files, s.bytes, jobs, stages,
-        jobMs, executions, phases)
+        jobMs, tasks, taskDeserMs, taskRunMs, executions, phases)
     }
   }
 

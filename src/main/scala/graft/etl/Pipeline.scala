@@ -8,6 +8,7 @@ import scala.util.Try
 import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession, classic}
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
 
 import graft.core.Schemas
 import graft.warehouse.Scd0
@@ -91,7 +92,7 @@ class Pipeline(
       source.eod(ticker, from), Schemas.eodRaw) // declared-schema contract (§1.2)
     val batch = Observation()
     load(Transforms.transformStock(raw, ticker).observe(batch, count(lit(1)).as("rows"),
-        max(col("stock_date")).cast("string").as("max_date")),
+        max(col("stock_date")).cast(StringType).as("max_date")),
       batch, "stage_stock_prices", Lake.writeStocks, stocksWarehousePath, "stock_key") { m =>
       val newWm = m.getString(1)
       if (newWm != null && newWm > wm) state.advance("Stock", ticker, newWm)

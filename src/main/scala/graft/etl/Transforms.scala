@@ -28,20 +28,26 @@ object Transforms {
   /** EOD raw → `stock_prices` (`API_manager.py:151-182`): literal ticker
     * (P4), date parse (F1), year/month/day derivation (F2), composite key
     * `yyyy-MM-dd/ticker` (F6), conditional column drop (P2), bulk rename
-    * (P3). Drop of absent columns is a no-op, matching the reference's
+    * (P3), as one `select`. Derived columns take the place of a raw column
+    * of the same name and otherwise follow the raw ones in the order
+    * above. Drop of absent columns is a no-op, matching the reference's
     * `if in columns` guard. */
   def transformStock(raw: DataFrame, ticker: String): DataFrame = {
-    val d = to_date(col("date"), "yyyy-MM-dd")
-    raw
-      .withColumn("stock", lit(ticker))
-      .withColumn("date", d)
-      .withColumn("year", year(col("date")))
-      .withColumn("month", month(col("date")))
-      .withColumn("day", dayofmonth(col("date")))
-      .withColumn("key",
-        concat(date_format(col("date"), "yyyy-MM-dd"), lit("/"), col("stock")))
-      .drop("adjusted_close", "warning")
-      .withColumnsRenamed(stockRenames)
+    val date = to_date(col("date"), "yyyy-MM-dd")
+    val stock = lit(ticker)
+    val derived = Seq(
+      "stock" -> stock,
+      "date" -> date,
+      "year" -> year(date),
+      "month" -> month(date),
+      "day" -> dayofmonth(date),
+      "key" -> concat(date_format(date, "yyyy-MM-dd"), lit("/"), stock))
+    val byName = derived.toMap
+    val kept = raw.columns.toSeq.filterNot(Set("adjusted_close", "warning"))
+    val names = kept ++ derived.map(_._1).filterNot(kept.contains)
+    raw.select(names.map { n =>
+      byName.getOrElse(n, col(s"`$n`")).as(stockRenames.getOrElse(n, n))
+    }: _*)
   }
 
   /** Symbol-list raw → `markets` (`API_manager.py:185-197`): keep only

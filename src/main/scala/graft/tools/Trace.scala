@@ -22,6 +22,8 @@ import graft.queries.{Gated, Registry}
   *  - `jobs`, `stages`, `job_ms` — Spark jobs and stages the action ran,
   *    and the wall time those jobs covered
   *  - `gap_ms` — action − job: driver time between and around the jobs
+  *  - `tasks`, `task_deser_ms`, `task_run_ms` — the action's tasks, and
+  *    their summed executor deserialization and run time
   *
   * With `planDir`, also writes `<planDir>/<gate>.txt`: the formatted
   * explain of the gate's frame, then its exchange and join counts.
@@ -35,14 +37,15 @@ object Trace {
 
   final case class Run(gate: String, run: Int, buildMs: Double, buildJobs: Int,
       phases: Map[String, Long], actionMs: Double, jobs: Int, stages: Int,
-      jobMs: Long) {
+      jobMs: Long, tasks: Int, taskDeserMs: Long, taskRunMs: Long) {
     def gapMs: Double = actionMs - jobMs
     def line: String = {
       val ph = Seq("analysis", "optimization", "planning")
         .map(p => s"${p}_ms=${phases.getOrElse(p, 0L)}").mkString(" ")
       f"TRACE $gate%s run=$run%d build_ms=$buildMs%.1f build_jobs=$buildJobs%d " +
         f"$ph%s action_ms=$actionMs%.1f jobs=$jobs%d stages=$stages%d " +
-        f"job_ms=$jobMs%d gap_ms=$gapMs%.1f"
+        f"job_ms=$jobMs%d gap_ms=$gapMs%.1f tasks=$tasks%d " +
+        f"task_deser_ms=$taskDeserMs%d task_run_ms=$taskRunMs%d"
     }
   }
 
@@ -61,7 +64,8 @@ object Trace {
       val (_, actionMs) = m.named("action")(timed(Bench.sink(df)))
       val b = m("build").get
       val a = m("action").get
-      Run(g.name, i, buildMs, b.jobs, a.phases, actionMs, a.jobs, a.stages, a.jobMs)
+      Run(g.name, i, buildMs, b.jobs, a.phases, actionMs, a.jobs, a.stages, a.jobMs,
+        a.tasks, a.taskDeserMs, a.taskRunMs)
     }
   }
 

@@ -94,6 +94,18 @@ object Bridge {
   def stateStoreLoaded(id: execution.streaming.state.StateStoreProviderId): Boolean =
     execution.streaming.state.StateStore.isLoaded(id)
 
+  /** A fresh copy of the session's Hadoop conf with its SQL confs set, as
+    * each query's file scan and write takes one (`sessionState` is
+    * `private[sql]`). */
+  def newHadoopConf(spark: SparkSession): org.apache.hadoop.conf.Configuration =
+    spark.asInstanceOf[classic.SparkSession].sessionState.newHadoopConf()
+
+  /** Initialize Spark's process-tree metrics getter, whose constructor
+    * runs `getconf PAGESIZE` as a child process once per JVM, from
+    * whichever heartbeat thread reaches it first (`private[spark]`). */
+  def initProcfsMetrics(): Unit =
+    org.apache.spark.executor.ProcfsMetricsGetter.pTreeInfo: Unit
+
   /** Wait until every event posted so far reached the listeners, at most
     * `timeoutMs`; returns on the timeout without throwing (the bus is
     * `private[spark]`). */

@@ -130,5 +130,18 @@ class MetricsSpec extends SparkSpec with BeforeAndAfterEach {
     assert(m("one_job").map(_.jobs) === Some(1))
     assert(m("three_jobs").map(_.jobs) === Some(3))
     assert(m("three_jobs").get.executions === 0)
+    // one single-file scan task; three jobs of two tasks each
+    assert(m("one_job").map(_.tasks) === Some(1))
+    assert(m("three_jobs").map(_.tasks) === Some(6))
+  }
+
+  test("a one-row parquet write scope reports its 1 task, inside the job time") {
+    val m = install()
+    val df = spark.range(0, 1, 1, 1).toDF("id")
+    m.named("write")(df.write.mode("overwrite").parquet(s"${tmpDir("metrics-write")}/t"))
+    val s = m("write").get
+    assert(s.tasks === 1)
+    assert(s.taskDeserMs >= 0 && s.taskRunMs >= 0, s)
+    assert(s.taskDeserMs + s.taskRunMs <= s.jobMs + 1, s)
   }
 }

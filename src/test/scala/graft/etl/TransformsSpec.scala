@@ -1,6 +1,7 @@
 package graft.etl
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.SparkSpec
 
@@ -24,6 +25,32 @@ class TransformsSpec extends SparkSpec {
     assert(r.getAs[Double]("stock_close") === 194.03)
     // stock_key fits the reference's VARCHAR(20) (DB_manager.py:54)
     assert(out.agg(max(length(col("stock_key")))).collect()(0).getInt(0) <= 20)
+  }
+
+  test("transformStock: exact field order and types, rows of the chained form") {
+    val raw = source.eod("AAPL", "1990-01-01")
+    val out = Transforms.transformStock(raw, "AAPL")
+    assert(out.schema.fields.map(f => f.name -> f.dataType).toSeq === Seq(
+      "stock_date" -> DateType, "stock_open" -> DoubleType,
+      "stock_high" -> DoubleType, "stock_low" -> DoubleType,
+      "stock_close" -> DoubleType, "stock_volume" -> LongType,
+      "stock_ticker" -> StringType, "stock_year" -> IntegerType,
+      "stock_month" -> IntegerType, "stock_day" -> IntegerType,
+      "stock_key" -> StringType))
+    // the same transform as one withColumn per derived column
+    val chained = raw
+      .withColumn("stock", lit("AAPL"))
+      .withColumn("date", to_date(col("date"), "yyyy-MM-dd"))
+      .withColumn("year", year(col("date")))
+      .withColumn("month", month(col("date")))
+      .withColumn("day", dayofmonth(col("date")))
+      .withColumn("key",
+        concat(date_format(col("date"), "yyyy-MM-dd"), lit("/"), col("stock")))
+      .drop("adjusted_close", "warning")
+      .withColumnsRenamed(Transforms.stockRenames)
+    assert(out.schema === chained.schema)
+    assert(out.orderBy("stock_date").collect().toSeq ===
+      chained.orderBy("stock_date").collect().toSeq)
   }
 
   test("transformStock: drop of absent optional columns is a no-op") {

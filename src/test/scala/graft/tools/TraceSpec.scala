@@ -16,6 +16,7 @@ class TraceSpec extends SparkSpec {
       assert(r.jobs >= 1, r.line)
       assert(r.stages >= r.jobs, r.line)
       assert(r.jobMs >= 0 && r.jobMs <= r.actionMs + 1, r.line)
+      assert(r.tasks >= 1 && r.line.contains(s" tasks=${r.tasks} "), r.line)
       assert(r.line.startsWith("TRACE q215_pagerank run="), r.line)
     }
   }

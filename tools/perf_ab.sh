@@ -7,9 +7,12 @@
 # $TMPDIR (default /tmp). Pair i runs `perfbench/run.py --workload
 # <workload> --seed <first-seed + i> --seconds 15 --trace 0` once on each
 # side for each workload, parent first on even i and change first on odd
-# i, so drift of the host over the session falls on both sides alike. Prints, per workload, each pair's
-# end-to-end metrics, then per metric the median and q1-q3 of each side,
-# the change of the medians and the pairs the change won. A run without a
+# i, so drift of the host over the session falls on both sides alike.
+# Prints, per workload, each pair's end-to-end metrics (and, where the run's
+# `params` line has it, `days_replayed`: a faster side replays more days in
+# the same 15 s, which moves `retained_heap_mb`), then per metric the median
+# and q1-q3 of each side, the change of the medians and the pairs the
+# change won. A run without a
 # result line stops the script; a run whose checks failed is kept and
 # marked. The directory is deleted on exit.
 set -euo pipefail
@@ -50,6 +53,7 @@ run_side() { # <side> <workload> <seed>
     exit 1
   fi
   tail -n 1 "$out" > "$DIR/results/$2/$1-$3.json"
+  sed -n 's/^workload .* params //p' "$out" | head -n 1 > "$DIR/results/$2/$1-$3.params.json"
 }
 
 for ((i = 0; i < PAIRS; i++)); do
@@ -75,15 +79,24 @@ def quart(xs):
 for workload in sys.argv[5:]:
     runs = {(side, s): json.load(open(f"{res}/{workload}/{side}-{s}.json"))
             for side in ("parent", "change") for s in seeds}
+    def params(side, s):
+        text = open(f"{res}/{workload}/{side}-{s}.params.json").read().strip()
+        return json.loads(text) if text else {}
+    days = {(side, s): params(side, s).get("days_replayed", "?")
+            for side in ("parent", "change") for s in seeds}
+    show_days = any(d != "?" for d in days.values())
     def val(side, s, m):
         return runs[(side, s)]["metrics"][m]["value"]
     print(f"== {workload}")
-    print("seed  " + "  ".join(f"{n} (parent/change)" for n in names))
+    print("seed  " + "  ".join(f"{n} (parent/change)" for n in names)
+          + ("  days_replayed (parent/change)" if show_days else ""))
     for s in seeds:
         marks = "".join(f" [{side} incorrect, {runs[(side, s)]['failed']} failed ops]"
                         for side in ("parent", "change") if not runs[(side, s)]["correct"])
         print(f"{s:<5} " + "  ".join(f"{val('parent', s, n):.6g}/{val('change', s, n):.6g}"
-                                     for n in names) + marks)
+                                     for n in names)
+              + (f"  {days[('parent', s)]}/{days[('change', s)]}" if show_days else "")
+              + marks)
     print(f"{'metric':<22} {'parent median (q1-q3)':>32} {'change median (q1-q3)':>32} "
           f"{'delta':>8} {'change better':>14}")
     for m in metrics:

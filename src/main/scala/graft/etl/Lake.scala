@@ -5,19 +5,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** "Bronce" lake layer (reference `API_manager.py:202-207`, layout
   * `main.py:33-37`): partitioned parquet append.
   *
-  * Parity layout partitions stocks by `year/month/day/ticker`
+  * The layout partitions stocks by `year/month/day/ticker`
   * (`API_manager.py:123`) — faithful, but at high ticker cardinality it
-  * explodes into tiny files (SURVEY §7.4). [[writeStocksCompact]] is the
-  * scale layout: partition directories by `year/month` only (readers still
-  * prune by date), ticker becomes a sort key inside row groups so parquet
-  * min/max row-group stats + dictionary filters take over ticker pruning.
+  * accretes tiny files (SURVEY §7.4); [[compact]] rewrites a partitioned
+  * dataset to one file per directory, and [[zorderWrite]] clusters one
+  * for multi-column file skipping.
   */
 object Lake {
 
   val stockPartitions: Seq[String] =
     Seq("stock_year", "stock_month", "stock_day", "stock_ticker")
 
-  /** Parity-layout write, IDEMPOTENT under retry: the batch's partitions
+  /** Lake write, IDEMPOTENT under retry: the batch's partitions
     * (year/month/day/ticker) are wholly owned by this ticker's dates, so
     * dynamic partition overwrite replaces exactly the partitions the
     * batch touches and leaves every other partition alone — a crashed
@@ -29,23 +28,6 @@ object Lake {
     df.write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(stockPartitions: _*)
-      .parquet(s"$root/stocks")
-
-  /** Scale layout: date-only directories, ticker-sorted row groups.
-    * Partition columns lead the sort — FileFormatWriter requires output
-    * ordered by them and would otherwise insert its OWN sort on just
-    * (year, month) above this one, paying twice and leaving the ticker
-    * clustering at the mercy of sort stability; with the prefix in
-    * place, the single sort serves the writer AND the row-group layout.
-    * NOTE append-only: (year, month) directories are shared across
-    * tickers, so partition overwrite would clobber other tickers' rows —
-    * retry idempotency for this layout needs read-side dedup or a
-    * table-format MERGE. */
-  def writeStocksCompact(df: DataFrame, root: String): Unit =
-    df.sortWithinPartitions(
-        "stock_year", "stock_month", "stock_ticker", "stock_date")
-      .write.mode("append")
-      .partitionBy("stock_year", "stock_month")
       .parquet(s"$root/stocks")
 
   /** Full-refresh write: dynamic overwrite of the exchange's partition —
@@ -89,9 +71,6 @@ object Lake {
     Fs.renameOverwrite(spark, tmp, dir)
     Fs.delete(spark, bak)
   }
-
-  def readMarkets(spark: SparkSession, root: String): DataFrame =
-    spark.read.parquet(s"$root/markets")
 
   // ---- multi-dimensional clustering (z-order) ---------------------------
 

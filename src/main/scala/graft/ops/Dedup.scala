@@ -803,25 +803,6 @@ object Dedup {
     rep
   }
 
-  /** Full connected components over a candidate-pair edge list (the exact
-    * generalization of [[nearDupGroups]]'s one-round approximation):
-    * returns (id, rep) with rep = the component's minimum id, for every id
-    * appearing in an edge.
-    *
-    * Iterative min-label propagation WITH pointer jumping: each round is
-    * (a) one equi-join of the symmetrized edges with the current labels
-    * plus a groupBy-min (the 1-hop spread), then (b) a rep-of-rep lookup
-    * against the same labels (the jump) — narrow (id, id) pairs only,
-    * partitioned by vertex id. The jump roughly halves every label's
-    * distance to its component minimum, so rounds = O(log diameter): a
-    * 64-vertex chain closes in ~7 rounds where plain propagation needs
-    * 63 (spec-pinned). Near-dup components are near-cliques and close in
-    * 2-3 rounds either way; the log bound is what survives adversarial
-    * chains at 100 TB. Each generation is eagerly localCheckpoint'ed —
-    * lineage TRUNCATION, not just caching, because the plan tree itself
-    * triples per round (see the in-body comment). The loop exits on a
-    * zero-changes round; `maxIter` is the safety bound.
-    */
   /** [[connectedComponents]] with a LOCALITY-CONDENSED pre-pass — the
     * fix for topologies where min-label propagation is hop-bound:
     * label information travels one edge per round, and on a long
@@ -913,16 +894,31 @@ object Dedup {
       reliable = reliable)
   }
 
+  /** Full connected components over a candidate-pair edge list (the exact
+    * generalization of [[nearDupGroups]]'s one-round approximation):
+    * returns (id, rep) with rep = the component's minimum id, for every id
+    * appearing in an edge.
+    *
+    * Iterative min-label propagation WITH pointer jumping: each round is
+    * (a) one equi-join of the symmetrized edges with the current labels
+    * plus a groupBy-min (the 1-hop spread), then (b) a rep-of-rep lookup
+    * against the same labels (the jump) — narrow (id, id) pairs only,
+    * partitioned by vertex id. The jump roughly halves every label's
+    * distance to its component minimum, so rounds = O(log diameter): a
+    * 64-vertex chain closes in ~7 rounds where plain propagation needs
+    * 63 (spec-pinned). Near-dup components are near-cliques and close in
+    * 2-3 rounds either way; the log bound is what survives adversarial
+    * chains at 100 TB. The loop is [[Lineage.iterate]]: each generation
+    * is eagerly checkpointed — lineage TRUNCATION, not just caching:
+    * generation n+1's plan reads generation n three times (1-hop join,
+    * change test, jump join), so the plan tree triples per round — with
+    * its change count observed on the same job and the generation before
+    * it released. The loop exits on a zero-changes round; `maxIter` is
+    * the safety bound, and exhausting it logs one WARN.
+    */
   def connectedComponents(edges: DataFrame, maxIter: Int = 20,
-      doubling: Boolean = true, reliable: Boolean = false): DataFrame = {
-    val (labels, rounds, converged) = ccWithRounds(edges, maxIter, doubling, reliable)
-    if (!converged)
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"connectedComponents exited at maxIter=$maxIter after $rounds rounds " +
-          "WITHOUT converging — returned labels may not be component minima; " +
-          "raise maxIter (rounds needed = O(log diameter))")
-    labels
-  }
+      doubling: Boolean = true, reliable: Boolean = false): DataFrame =
+    ccWithRounds(edges, maxIter, doubling, reliable)._1
 
   /** Canonical-document selection per duplicate component — the KEEP
     * POLICY layer over [[connectedComponents]]: within each component,
@@ -963,11 +959,10 @@ object Dedup {
   }
 
   /** [[connectedComponents]] + rounds run + convergence flag (spec evidence
-    * for the pointer-jumping convergence bound; callers of the public
-    * method get a WARN log on a maxIter exit instead of silence). */
+    * for the pointer-jumping convergence bound; gates that need converged
+    * labels check the flag). */
   private[graft] def ccWithRounds(edges: DataFrame, maxIter: Int = 20,
       doubling: Boolean = true, reliable: Boolean = false): (DataFrame, Int, Boolean) = {
-    val spark = edges.sparkSession
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     // the edge list is consumed by EVERY propagation round — persisted and
     // materialized once, or each round re-runs the (possibly expensive)
@@ -984,28 +979,15 @@ object Dedup {
     // checkpoint blocks together, and the contention costs more than the
     // extra driver round-trip saves. Keep the dedicated materialization.
     sym.count()
-    // each generation goes through an EAGER checkpoint, not persist:
-    // generation n+1's plan references generation n three times (1-hop
-    // join, self for the change test, jump join), so the LOGICAL plan tree
-    // grows 3^rounds — caching dedups execution but the plan object alone
-    // OOMs the driver past ~10 rounds. The checkpoint flattens each
-    // generation to a LogicalRDD. reliable=false holds the blocks on
-    // executors (fast; lost on executor death); reliable=true writes each
-    // generation to the configured checkpoint dir — the right mode for a
-    // 10-round job on a preemptible 100 TB cluster, where losing a
-    // generation block mid-loop would otherwise kill the job.
-    if (reliable) Lineage.ensureCheckpointDir(sym, "connectedComponents")
-    def ckpt(df: DataFrame): DataFrame = Lineage.barrier(df, reliable)
-    var labels = ckpt(sym.select(col("src").as("id")).distinct()
-      .select(col("id"), col("id").as("rep")))
     /** One min-label propagation step (1-hop min + optional pointer jump)
-      * from the (id, rep, old) mapping `l`; `old` is carried through
-      * untouched for the generation's change test. One step per
-      * generation: batching two steps between barriers measured slower on
-      * every CC-backed gate at sf0.1 (r20, 11.16→15.40 s over 9 gates) —
-      * these graphs converge in 1-2 steps, so a second pass over the full
-      * sym table costs more than the barrier job it saves. */
-    def step(l: DataFrame): DataFrame = {
+      * from the (id, rep) generation `gen`; `old` is the incoming rep,
+      * kept for the generation's change test. One step per generation:
+      * batching two steps between barriers measured slower on every
+      * CC-backed gate at sf0.1 (r20, 11.16→15.40 s over 9 gates) — these
+      * graphs converge in 1-2 steps, so a second pass over the full sym
+      * table costs more than the barrier job it saves. */
+    def step(gen: DataFrame): DataFrame = {
+      val l = gen.withColumn("old", col("rep"))
       val nbrMin = sym
         .join(l.select(col("id").as("src"), col("rep")), Seq("src"))
         .groupBy(col("dst").as("id"))
@@ -1025,35 +1007,12 @@ object Dedup {
           least(col("rep1"), coalesce(col("rep2"), col("rep1"))).as("rep"),
           col("old"))
     }
-    var changed = 1L
-    var iter = 0
-    while (changed > 0 && iter < maxIter) {
-      // the change count rides the checkpoint-materialization job as an
-      // observed metric — one action per round, not two (round-6 wrong #4)
-      val obs = new org.apache.spark.sql.Observation()
-      val next = ckpt(step(labels.withColumn("old", col("rep"))).observe(obs,
-        sum(when(col("rep") =!= col("old"), 1L).otherwise(0L)).as("changed")))
-      // the metric arrives via the async listener bus; on the (never yet
-      // observed) chance it doesn't, fall back to an explicit count over
-      // the now-checkpointed generation rather than hang the loop
-      changed =
-        try scala.concurrent.Await
-          .result(obs.future, scala.concurrent.duration.Duration(60, "s"))
-          .getAs[Long]("changed")
-        catch {
-          case _: java.util.concurrent.TimeoutException =>
-            next.filter(col("rep") =!= col("old")).count()
-        }
-      // generation n−1's blocks are dead once n is materialized and the
-      // change count is read — without this the executor block store grows
-      // linearly with rounds (round-6 advisor finding)
-      org.apache.spark.sql.graft.Bridge.backingRdds(labels)
-        .foreach(_.unpersist(false))
-      labels = next.drop("old")
-      iter += 1
-    }
+    val seed = sym.select(col("src").as("id")).distinct()
+      .select(col("id"), col("id").as("rep"))
+    val run = Lineage.iterate(seed, maxIter, reliable,
+      changed = Some(col("rep") =!= col("old")))(step)
     sym.unpersist()
-    (labels, iter, changed == 0L)
+    (run.frame.select(col("id"), col("rep")), run.rounds, run.converged)
   }
 
   /** Exact n-gram Jaccard for a set of candidate pairs (verification pass

@@ -55,10 +55,6 @@ object Graphs {
     *              donate their mass as dangling
     * @param iterations fixed round count (small, so the oracle can
     *                   unroll it as chained CTEs)
-    * @param barrierEvery lineage-barrier cadence: a checkpoint every
-    *                     this many rounds (never after the last).
-    *                     `Int.MaxValue` disables barriers — measurement
-    *                     use only
     * @param reliable barrier durability, mirroring
     *                 [[Dedup.connectedComponents]]: `false` =
     *                 localCheckpoint (fast; blocks lost on executor
@@ -67,12 +63,8 @@ object Graphs {
     * @return one row per node: `(id, score)` with `Σ score ≈` [[Scale]]
     */
   def pageRank(edges: DataFrame, nodes: DataFrame,
-      iterations: Int, barrierEvery: Int = 4,
-      reliable: Boolean = false): DataFrame = {
+      iterations: Int, reliable: Boolean = false): DataFrame = {
     require(iterations >= 1, s"pageRank: iterations >= 1, got $iterations")
-    require(barrierEvery >= 1,
-      s"pageRank: barrierEvery >= 1, got $barrierEvery")
-    if (reliable) Lineage.ensureCheckpointDir(edges, "pageRank")
     // driver-side scalars by contract: two counts, nothing row-shaped
     val n = nodes.count()
     require(n > 0, "pageRank: empty node set")
@@ -93,9 +85,7 @@ object Graphs {
       .join(deg.select(col("src")), nodes("id") === col("src"), "left")
       .select(nodes("id"), col("src").isNull.as("dang"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    var score = nodesT.select(col("id"), col("dang"),
-      lit(Scale / n).as("score"))
-    for (i <- 1 to iterations) {
+    def step(score: DataFrame): DataFrame = {
       // 1-row frame; joined back with shuffle_replicate_nl (cartesian
       // against one row) rather than broadcast: a BroadcastExchange of
       // the scalar is materialized by a SEPARATE driver job per round,
@@ -113,27 +103,25 @@ object Graphs {
       // shuffle_hash on the aggregated in-mass side: an estimate-driven
       // broadcast of a node-sized table is the q77 hazard; the hinted
       // build side is the (never larger) aggregate output
-      score = nodesT
+      nodesT
         .join(in.hint("shuffle_hash"), nodesT("id") === in("dst"), "left")
         .crossJoin(dm.hint("shuffle_replicate_nl"))
         .select(nodesT("id"), col("dang"), (lit(base) +
           idiv(lit(17L) * (coalesce(col("m"), lit(0L)) + col("dshare")),
             lit(20L))).as("score"))
-      // lineage barrier: each round reads `score` TWICE (the dangling
-      // aggregate and the contribution join), so the unbarriered plan
-      // doubles per round — the q231 blowup shape. Fine at the gate's 3
-      // rounds (8× a round's plan); past ~10 the analyzer, not the
-      // data, becomes the cost (measured at sf0.001). A localCheckpoint
-      // on a cadence caps the depth at 2^barrierEvery round-plans while
-      // adding zero barriers at ≤ barrierEvery rounds, so the q215
-      // gate's bench cost is untouched; values are identical (the barrier
-      // only materializes the same integers), so the unrolled-CTE oracle
-      // needs no change (the ccWithRounds discipline, on a cadence
-      // instead of per generation).
-      if (i % barrierEvery == 0 && i < iterations)
-        score = Lineage.barrier(score, reliable)
     }
-    score.select(col("id"), col("score"))
+    // lineage barrier per round: each round reads `score` TWICE (the
+    // dangling aggregate and the contribution join), so the unbarriered
+    // plan doubles per round — the q231 blowup shape; past ~10 rounds the
+    // analyzer, not the data, becomes the cost. Round 1 is the seed, so
+    // the uniform start is never barriered, and the fixed-count loop
+    // leaves the last round lazy: `iterations − 1` barrier jobs. Values
+    // are identical (the barrier only materializes the same integers), so
+    // the unrolled-CTE oracle needs no change.
+    val first = step(nodesT.select(col("id"), col("dang"),
+      lit(Scale / n).as("score")))
+    Lineage.iterate(first, iterations - 1, reliable)(step).frame
+      .select(col("id"), col("score"))
     // adj/nodesT unpersist with the session; gates are one-shot
   }
 }

@@ -158,35 +158,28 @@ object Triangles {
     // exist — support values are identical; TrianglesSpec pins both
     // rounds' outcomes.) The triangle table is triangle-count-sized —
     // the same volume the wedge join already materialized transiently
-    // every round — checkpointed per generation with the previous
-    // generation's blocks released, the CC-loop cleanup discipline.
+    // every round — and each generation of it is a Lineage.iterate
+    // barrier, released once the next one is materialized. The surviving
+    // edge set is not barriered: its three semi-join reads share one
+    // aggregate exchange (ReusedExchange).
     def canon(x: Column, y: Column) =
       struct(least(x, y).as("u"), greatest(x, y).as("v"))
-    var tris = closedWedges(cur, degrees(cur), barrierOriented = true)
+    val tris = closedWedges(cur, degrees(cur), barrierOriented = true)
       .select(canon(col("src"), col("w1")).as("e1"),
         canon(col("src"), col("w2")).as("e2"),
         canon(col("w1"), col("w2")).as("e3"))
-      .localCheckpoint()
     def supportOf(t: DataFrame): DataFrame = t
       .select(explode(array(col("e1"), col("e2"), col("e3"))).as("e"))
       .select(col("e.u"), col("e.v"))
       .groupBy(col("u"), col("v")).agg(count(lit(1)).as("support"))
-    var sup = supportOf(tris).filter(col("support") >= minSupport)
-    (2 to rounds).foreach { _ =>
-      // materialized once: three semi-join consumers below
-      val alive = sup.select(struct(col("u"), col("v")).as("e"))
-        .localCheckpoint()
-      val next = tris
-        .join(alive.select(col("e").as("e1")), Seq("e1"), "left_semi")
+      .filter(col("support") >= minSupport)
+    val last = Lineage.iterate(tris, rounds - 1, reliable = false) { t =>
+      val alive = supportOf(t).select(struct(col("u"), col("v")).as("e"))
+      t.join(alive.select(col("e").as("e1")), Seq("e1"), "left_semi")
         .join(alive.select(col("e").as("e2")), Seq("e2"), "left_semi")
         .join(alive.select(col("e").as("e3")), Seq("e3"), "left_semi")
-        .localCheckpoint()
-      org.apache.spark.sql.graft.Bridge.backingRdds(tris)
-        .foreach(_.unpersist(false))
-      tris = next
-      sup = supportOf(tris).filter(col("support") >= minSupport)
-    }
-    sup
+    }.frame
+    supportOf(last)
   }
 
   /** Bounded-round k-core peel: `rounds` iterations of "drop every node
@@ -209,17 +202,23 @@ object Triangles {
     require(rounds >= 1, "need at least one peel round")
     require(k >= 1, s"kCorePeel: k must be >= 1, got $k")
     // same barrier rationale as trussPeel: each round's edge set feeds
-    // the degree aggregate AND two semi-joins next round; localCheckpoint
-    // keeps the lineage one generation deep (graph-sized blocks)
-    var cur = edges.localCheckpoint()
-    var keep = degrees(cur).filter(col("deg") >= k)
-    (2 to rounds).foreach { _ =>
-      cur = cur
-        .join(keep.select(col("node").as("u")), Seq("u"), "left_semi")
-        .join(keep.select(col("node").as("v")), Seq("v"), "left_semi")
-        .select(col("u"), col("v")).localCheckpoint()
-      keep = degrees(cur).filter(col("deg") >= k)
-    }
-    keep
+    // the degree aggregate AND two semi-joins next round; Lineage.iterate
+    // keeps the lineage one generation deep (graph-sized blocks). The
+    // degrees come from ONE read of the edge set (explode, not the union
+    // of two projections), so the lazy last generation is not run twice.
+    // The surviving-node sets are broadcast by hint (one long per node):
+    // the shape the planner chose from the carried stats before the
+    // barrier stripped them, not two sort-merge joins with their shuffles
+    def keep(cur: DataFrame) = cur
+      .select(explode(array(col("u"), col("v"))).as("node"))
+      .groupBy(col("node")).agg(count(lit(1)).as("deg"))
+      .filter(col("deg") >= k)
+    val last = Lineage.iterate(edges, rounds - 1, reliable = false) { cur =>
+      val alive = keep(cur)
+      cur.join(broadcast(alive.select(col("node").as("u"))), Seq("u"), "left_semi")
+        .join(broadcast(alive.select(col("node").as("v"))), Seq("v"), "left_semi")
+        .select(col("u"), col("v"))
+    }.frame
+    keep(last)
   }
 }

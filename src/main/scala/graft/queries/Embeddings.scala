@@ -1829,7 +1829,7 @@ object Embeddings {
     val edges = Similarity.knnGraphLsh(vectors(spark, dir), k = 5)
       .select(col("id").as("src"), col("neighbor_id").as("dst"))
     val nodes = Tables.embeddings(spark, dir).select(col("vec_id").as("id"))
-    graft.ops.Graphs.pageRank(edges, nodes, iterations = 3, barrierEvery = 1)
+    graft.ops.Graphs.pageRank(edges, nodes, iterations = 3)
       .orderBy(col("score").desc, col("id")).limit(20)
       .withColumn("rank", row_number()
         .over(Window.orderBy(col("score").desc, col("id"))).cast("long"))

@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{FormattedMode, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.graft.Bridge
 
 import graft.Bench
 import graft.core.{GraftSession, Metrics}
@@ -14,8 +15,8 @@ import graft.queries.{Gated, Registry}
   * warm-up, then [[Runs]] runs, each from a [[Bench.quiesce]]d block store
   * like a bench sample, printing one line per run:
   *
-  *  - `build_ms`, `build_jobs` — the gate function: driver-side plan
-  *    construction plus any eager barrier jobs it runs
+  *  - `build_ms`, `build_jobs`, `build_stages` — the gate function:
+  *    driver-side plan construction plus any eager barrier jobs it runs
   *  - `analysis_ms` / `optimization_ms` / `planning_ms` — Catalyst phases
   *    of the action's SQL executions
   *  - `action_ms` — the [[Bench.sink]] materialization
@@ -24,6 +25,8 @@ import graft.queries.{Gated, Registry}
   *  - `gap_ms` — action − job: driver time between and around the jobs
   *  - `tasks`, `task_deser_ms`, `task_run_ms` — the action's tasks, and
   *    their summed executor deserialization and run time
+  *  - `rdd_blocks` — RDDs that still hold blocks in the block store after
+  *    the run: what the gate left behind
   *
   * With `planDir`, also writes `<planDir>/<gate>.txt`: the formatted
   * explain of the gate's frame, then its exchange and join counts.
@@ -36,16 +39,17 @@ object Trace {
   val Runs = 3
 
   final case class Run(gate: String, run: Int, buildMs: Double, buildJobs: Int,
-      phases: Map[String, Long], actionMs: Double, jobs: Int, stages: Int,
-      jobMs: Long, tasks: Int, taskDeserMs: Long, taskRunMs: Long) {
+      buildStages: Int, phases: Map[String, Long], actionMs: Double, jobs: Int, stages: Int,
+      jobMs: Long, tasks: Int, taskDeserMs: Long, taskRunMs: Long, rddBlocks: Int) {
     def gapMs: Double = actionMs - jobMs
     def line: String = {
       val ph = Seq("analysis", "optimization", "planning")
         .map(p => s"${p}_ms=${phases.getOrElse(p, 0L)}").mkString(" ")
       f"TRACE $gate%s run=$run%d build_ms=$buildMs%.1f build_jobs=$buildJobs%d " +
+        f"build_stages=$buildStages%d " +
         f"$ph%s action_ms=$actionMs%.1f jobs=$jobs%d stages=$stages%d " +
         f"job_ms=$jobMs%d gap_ms=$gapMs%.1f tasks=$tasks%d " +
-        f"task_deser_ms=$taskDeserMs%d task_run_ms=$taskRunMs%d"
+        f"task_deser_ms=$taskDeserMs%d task_run_ms=$taskRunMs%d rdd_blocks=$rddBlocks%d"
     }
   }
 
@@ -64,8 +68,8 @@ object Trace {
       val (_, actionMs) = m.named("action")(timed(Bench.sink(df)))
       val b = m("build").get
       val a = m("action").get
-      Run(g.name, i, buildMs, b.jobs, a.phases, actionMs, a.jobs, a.stages, a.jobMs,
-        a.tasks, a.taskDeserMs, a.taskRunMs)
+      Run(g.name, i, buildMs, b.jobs, b.stages, a.phases, actionMs, a.jobs, a.stages, a.jobMs,
+        a.tasks, a.taskDeserMs, a.taskRunMs, Bridge.rddsWithBlocks(spark.sparkContext).size)
     }
   }
 

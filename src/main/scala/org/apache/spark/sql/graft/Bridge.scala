@@ -31,6 +31,15 @@ object Bridge {
   def backingRdds(df: DataFrame): Seq[org.apache.spark.rdd.RDD[_]] =
     analyzed(df).collect { case lr: execution.LogicalRDD => lr.rdd }
 
+  /** Ids of the RDDs that hold blocks in any block manager now, asked of
+    * the block managers themselves (the master is `private[spark]`).
+    * `getPersistentRDDs` is a weak map, so it misses blocks whose RDD
+    * object was already collected. */
+  def rddsWithBlocks(sc: SparkContext): Set[Int] =
+    sc.env.blockManager.master
+      .getMatchingBlockIds(_.isRDD, askStorageEndpoints = true)
+      .collect { case b: org.apache.spark.storage.RDDBlockId => b.rddId }.toSet
+
   /** Rebuild a just-checkpointed frame WITHOUT the carried
     * `originStats`/`originConstraints`. `Dataset.checkpoint` preserves
     * the parent plan's `Statistics` into the barrier's `LogicalRDD`

@@ -473,6 +473,20 @@ class DedupSpec extends SparkSpec {
     assert(spark.sparkContext.getCheckpointDir.isDefined)
   }
 
+  test("reliable-checkpoint CC keeps only the final generation's checkpoint files") {
+    val chain = (0L until 31L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    def rddDirs(): Set[String] = spark.sparkContext.getCheckpointDir.toSeq
+      .flatMap(d => Option(new java.io.File(new java.net.URI(d)).listFiles()).toSeq.flatten)
+      .map(_.getName).filter(_.startsWith("rdd-")).toSet
+    val before = rddDirs()
+    val (labels, rounds, converged) =
+      Dedup.ccWithRounds(chain, maxIter = 15, reliable = true)
+    assert(converged && rounds > 1)
+    assert((rddDirs() -- before).size === 1)
+    // the surviving files are the ones the labels read
+    assert(labels.as[(Long, Long)].collect().forall(_._2 === 0L))
+  }
+
   test("minhashCrossCandidates: planted benchmark paraphrase found, bench broadcast") {
     val bench = Seq((1L, "alpha beta gamma delta epsilon zeta eta theta"))
       .toDF("doc_id", "text")

@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 
 import graft.SparkSpec
 
@@ -11,6 +12,15 @@ import graft.SparkSpec
   * isolated nodes, and a disconnected component.
   */
 class GraphsSpec extends SparkSpec {
+
+  /** 25 nodes, up to 50 random directed edges without self-loops. */
+  private def randomGraph(seed: Long): (Seq[(Long, Long)], Seq[Long]) = {
+    val rng = new scala.util.Random(seed)
+    val n = 25
+    val edges = Seq.fill(2 * n)((rng.nextInt(n).toLong, rng.nextInt(n).toLong))
+      .filter { case (s, d) => s != d }
+    (edges, (0L until n.toLong).toSeq)
+  }
 
   /** The reference recursion, literal: same Scale, same floors, same
     * dangling redistribution as the scaladoc contract. */
@@ -89,48 +99,20 @@ class GraphsSpec extends SparkSpec {
   }
 
   test("deep round counts: lineage barrier changes no values") {
-    // 10 rounds crosses the default cadence twice (i = 4, 8); the
-    // barriered run, the unbarriered run, and the plain-Scala replica
-    // must produce byte-identical scores — the barrier is purely a
-    // plan-depth cap (Graphs.pageRank cadence note).
+    // 10 rounds run 9 barriers; the barriered run and the plain-Scala
+    // replica must produce identical scores — the barrier is purely a
+    // plan-depth cap
     import spark.implicits._
-    val rng = new scala.util.Random(14L)
-    val n = 25
-    val nodes = (0L until n.toLong).toSeq
-    val edges = Seq.fill(2 * n)(
-      (rng.nextInt(n).toLong, rng.nextInt(n).toLong))
-      .filter { case (s, d) => s != d }
-    val e = edges.toDF("src", "dst")
-    val v = nodes.toDF("id")
-    val barriered = Graphs.pageRank(e, v, 10)
+    val (edges, nodes) = randomGraph(14L)
+    val barriered = Graphs.pageRank(edges.toDF("src", "dst"), nodes.toDF("id"), 10)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(barriered === replica(edges, nodes, 10))
-    // the unbarriered control runs SIX rounds, not ten: each unbarriered
-    // round references the rank frame twice, so the control's plan tree
-    // is 2^rounds round-plans and ten rounds spent 4m32s of the suite in
-    // the analyzer alone (r20 measured; the values were never at risk —
-    // the replica checks each run independently, so shrinking the
-    // control's round count weakens nothing while the 2^10 plan bought
-    // only planner-stress coverage the DedupSpec stats-blowup test
-    // already owns)
-    val plain = Graphs.pageRank(e, v, 6, barrierEvery = Int.MaxValue)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(plain === replica(edges, nodes, 6))
   }
 
-  test("barrierEvery is validated like iterations; reliable barriers " +
-      "change no values (ADVICE r14)") {
+  test("reliable barriers change no values") {
     import spark.implicits._
     val e = Seq((0L, 1L), (1L, 0L)).toDF("src", "dst")
     val v = Seq(0L, 1L, 2L).toDF("id")
-    // 0 would throw ArithmeticException mid-loop (i % 0); negatives
-    // silently disabled barriers — both must fail fast at the door
-    intercept[IllegalArgumentException] {
-      Graphs.pageRank(e, v, 3, barrierEvery = 0)
-    }
-    intercept[IllegalArgumentException] {
-      Graphs.pageRank(e, v, 3, barrierEvery = -4)
-    }
     // the reliable (checkpoint-dir) barrier is value-identical to the
     // local one — same contract as connectedComponents' reliable knob
     val want = Graphs.pageRank(e, v, 10)
@@ -138,5 +120,25 @@ class GraphsSpec extends SparkSpec {
     val rel = Graphs.pageRank(e, v, 10, reliable = true)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(rel === want)
+  }
+
+  test("dead rank generations are released: 3 and 10 rounds leave the " +
+      "same number of RDDs holding blocks") {
+    import spark.implicits._
+    // distinct graphs, so the second call's persisted edge and node
+    // tables are not cache hits on the first call's
+    def left(seed: Long, rounds: Int): Int = {
+      val (edges, nodes) = randomGraph(seed)
+      val sc = spark.sparkContext
+      val before = Bridge.rddsWithBlocks(sc)
+      val ranks = Graphs.pageRank(edges.toDF("src", "dst"), nodes.toDF("id"), rounds)
+      assert(ranks.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ===
+        replica(edges, nodes, rounds))
+      val n = (Bridge.rddsWithBlocks(sc) -- before).size
+      java.lang.ref.Reference.reachabilityFence(ranks)
+      n
+    }
+    val three = left(21L, 3)
+    assert(left(22L, 10) === three)
   }
 }

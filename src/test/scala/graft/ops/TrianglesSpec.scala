@@ -112,4 +112,22 @@ class TrianglesSpec extends SparkSpec {
       Triangles.trussPeel(g, minSupport = 0L, rounds = 1)
     }
   }
+
+  test("k-core peel releases dead generations: 3 and 10 rounds leave the " +
+      "same number of RDDs holding blocks") {
+    // K4 core plus a pendant path that round 1 peels away
+    val g = ((Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L))) ++
+      (4L until 16L).map(i => (i, i + 1))).toDF("u", "v")
+    def left(rounds: Int): Int = {
+      val sc = spark.sparkContext
+      val before = org.apache.spark.sql.graft.Bridge.rddsWithBlocks(sc)
+      val core = Triangles.kCorePeel(g, k = 3L, rounds = rounds)
+      assert(core.collect().map(_.getLong(0)).toSet === Set(1L, 2L, 3L, 4L))
+      val n = (org.apache.spark.sql.graft.Bridge.rddsWithBlocks(sc) -- before).size
+      java.lang.ref.Reference.reachabilityFence(core)
+      n
+    }
+    val three = left(3)
+    assert(left(10) === three)
+  }
 }

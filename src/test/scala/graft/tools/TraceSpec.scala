@@ -17,6 +17,7 @@ class TraceSpec extends SparkSpec {
       assert(r.stages >= r.jobs, r.line)
       assert(r.jobMs >= 0 && r.jobMs <= r.actionMs + 1, r.line)
       assert(r.tasks >= 1 && r.line.contains(s" tasks=${r.tasks} "), r.line)
+      assert(r.rddBlocks >= 0 && r.line.endsWith(s" rdd_blocks=${r.rddBlocks}"), r.line)
       assert(r.line.startsWith("TRACE q215_pagerank run="), r.line)
     }
   }

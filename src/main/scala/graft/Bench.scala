@@ -61,23 +61,6 @@ object Bench {
   def runGate(spark: SparkSession, g: Gated, dir: String): Unit =
     sink(g.df(spark, dir))
 
-  /** Drop EVERY block a previous run left in the executor store: the
-    * catalog cache (persist) AND the localCheckpoint RDDs, which
-    * `clearCache()` does not see — they only die when the ContextCleaner
-    * gets around to their GC'd references. Measured (r19): under the
-    * query-major pass order all 3 samples of the early-registry gates
-    * landed in the post-warm-up window while ~256 gates' checkpoint
-    * blocks still occupied unified memory, and the squeezed execution
-    * side spilled — q8_rolling_mean timed 7.82 s in the full run vs
-    * 0.88 s isolated (q9 1.68 vs 0.17, q12 1.26 vs 0.22). Explicit
-    * blocking unpersist makes every sample start from the same empty
-    * block store, which is what "cold-cache steady state" meant. */
-  def quiesce(spark: SparkSession): Unit = {
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = true))
-  }
-
   /** Oracle pairing stamp (r18 verdict item 2): the committed
     * BENCH_quiet_r18.json carried ratio=1.0021 computed against an oracle
     * file that was later replaced (true committed-pairing ratio 1.326) —
@@ -123,8 +106,7 @@ object Bench {
     // timing (before/after on one gate); the driver's env-free run
     // benches everything
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(',').toSet)
-    val headline = Registry.all.filter(_.bench)
-      .filter(g => only.forall(_.contains(g.name)))
+    val headline = Registry.all.filter(g => only.forall(_.contains(g.name)))
 
     // cumulative state for incremental emission; guarded by `lock` because
     // the shutdown hook reads it from another thread
@@ -217,8 +199,8 @@ object Bench {
     // warm-up: one discarded pass on the TARGET sf — primes JIT, codegen
     // cache, parquet footer cache, and one-time artifacts (q35's trained
     // IVF centroids), so timed passes measure steady-state serving, not
-    // first-touch setup. Quiesce between gates: without it the block
-    // store carries the whole registry's persists by the end of the pass.
+    // first-touch setup. Each run is `Gated.owned`: released outside the
+    // timed span, so every sample starts from an empty block store.
     // The warm-up wall time is RECORDED per gate ("w" in the samples
     // evidence): a gate whose timed median later exceeds a multiple of
     // its own warm-up has degraded AFTER proving it can run fast in this
@@ -228,29 +210,22 @@ object Bench {
     // under 5%; the r19 driver's q219/q148 medians were the same shape).
     val warmSecs = scala.collection.mutable.Map.empty[String, Double]
     headline.foreach { g =>
-      val t0 = System.nanoTime()
-      try {
+      try Gated.owned(spark) {
+        val t0 = System.nanoTime()
         runGate(spark, g, sfDir)
         warmSecs(g.name) = (System.nanoTime() - t0) / 1e9
       } catch { case _: Throwable => () }
-      quiesce(spark)
     }
 
-    def timeOnce(g: Gated): Either[String, Double] = {
-      // leftover persisted intermediates (q47's curation barriers, q57's
-      // history generations, q65's decode cache) would otherwise hand
-      // their cache to the next run via canonical-plan matching — the
-      // median must time cold-cache steady state, not cache hits
-      quiesce(spark)
-      val t0 = System.nanoTime()
-      try {
+    def timeOnce(g: Gated): Either[String, Double] =
+      try Gated.owned(spark) {
+        val t0 = System.nanoTime()
         runGate(spark, g, sfDir)
         Right((System.nanoTime() - t0) / 1e9)
       } catch {
         case e: Throwable =>
           Left(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}")
       }
-    }
 
     // Adaptive per-query passes: 3 runs; while max/min − 1 > 5% and fewer
     // than 5 runs taken, add a run (a load spike shows up as spread, and

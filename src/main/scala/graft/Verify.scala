@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 import com.fasterxml.jackson.databind.ObjectMapper
 
 import graft.core.GraftSession
+import graft.queries.Gated
 
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
@@ -29,16 +30,11 @@ object Verify {
       case (name, _) => only.forall(_.contains(name))
     }
     selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+      try Gated.owned(spark)(fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/$name"))
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // gates that persist() intermediates (q47 curation, q57 SCD2, q65
-      // media decode) would otherwise stack their cached blocks across all
-      // ~68 queries of this single session — executor memory then shrinks
-      // query by query and the later gates pay eviction churn
-      spark.catalog.clearCache()
     }
     // Jackson escapes backslash, quote and ALL control chars — a tab or CR
     // in an oracle SQL string would otherwise break the JSON reader of the

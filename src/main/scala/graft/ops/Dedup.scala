@@ -463,10 +463,10 @@ object Dedup {
       // common-subplan reuse across DataFrame references, so without a
       // persist the shingle+hash kernel — the dominant per-ingest CPU —
       // would run twice per ingest. The cached block is method-local and
-      // lives until the session clears its cache — fine for one-shot
-      // callers (the q68 gate; Verify/Bench clear between queries); a
-      // long-lived ingest loop should use [[withIncrementalCandidates]],
-      // which unpersists after each ingest.
+      // lives until its owner releases it — fine for one-shot callers
+      // (the q68 gate, released by `Gated.owned`); a long-lived ingest
+      // loop should use [[withIncrementalCandidates]], which unpersists
+      // after each ingest.
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     candidatesIncremental(newSig, index, numHashes)
   }
@@ -646,9 +646,9 @@ object Dedup {
     val newFp = winnowFingerprints(batch, idCol, textCol, k, w)
       // feeds the mask, the probe side, and the union — without a persist
       // the kernel (the dominant per-ingest CPU) would run three times.
-      // The cached block is method-local and lives until the session
-      // clears its cache — fine for one-shot callers (the q253 gate;
-      // Verify/Bench clear between queries); a long-lived ingest loop
+      // The cached block is method-local and lives until its owner
+      // releases it — fine for one-shot callers (the q253 gate, released
+      // by `Gated.owned`); a long-lived ingest loop
       // must use [[winnowIngestBatch]] or [[withWinnowCandidates]],
       // which unpersist after each ingest (the
       // [[minhashCandidatesIncremental]] / [[withIncrementalCandidates]]

@@ -122,6 +122,6 @@ object Graphs {
       lit(Scale / n).as("score")))
     Lineage.iterate(first, iterations - 1, reliable)(step).frame
       .select(col("id"), col("score"))
-    // adj/nodesT unpersist with the session; gates are one-shot
+    // adj/nodesT are released by the gate run's owner (Gated.owned)
   }
 }

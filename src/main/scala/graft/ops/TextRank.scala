@@ -434,6 +434,6 @@ object TextRank {
       .withColumn("rank",
         row_number().over(Window.orderBy(col("r").desc, col("term"))).cast("long"))
       .select(col("rank"), col("term"), col("r").as("score_fp6"))
-    // `adj` unpersists with the session; gates are one-shot per session
+    // `adj` is released by the gate run's owner (Gated.owned)
   }
 }

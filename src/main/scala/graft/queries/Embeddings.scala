@@ -2307,11 +2307,9 @@ object Embeddings {
     // behavior (no c1 row → zero output rows) with an empty frame
     val seedOpt = v.orderBy(col("id")).select(col("id"), col("vec"))
       .head(1).headOption
-    if (seedOpt.isEmpty) {
-      v.unpersist()
+    if (seedOpt.isEmpty)
       return List.empty[(Long, Long, Double)]
         .toDF("round", "center_id", "radius")
-    }
     val seed = seedOpt.get
     var picks = List((1L, seed.getLong(0), 0.0))
     var centerVec: Seq[Float] = seed.getSeq[Float](1)
@@ -2325,7 +2323,6 @@ object Embeddings {
       cur = cur.withColumn("mind", least(col("mind"),
         lit(1.0) - Similarity.cosine(col("vec"), typedlit(centerVec))))
     }
-    v.unpersist()
     picks.reverse.toDF("round", "center_id", "radius")
   }
 

@@ -1155,8 +1155,7 @@ object Events {
     // .getDate(0) NPE'd where the old crossJoin anchor degraded
     // gracefully. An empty corpus returns the empty frame (the SQL's
     // aggregate-over-empty row is all-NULL/0 and never compared —
-    // the driver gates on rows > 0), and `ev` is unpersisted after
-    // the final action below so the cache doesn't outlive the gate.
+    // the driver gates on rows > 0).
     val d0row = e.agg(min(to_date(col("ts")))).head()
     val outSchema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("n_test_users",
@@ -1227,7 +1226,7 @@ object Events {
       .join(ti.select(col("user_id")).distinct(), Seq("user_id"), "left_semi")
       .join(rk.select(col("user_id"), col("neighbor").as("target"), col("rnk")),
         Seq("user_id", "target"), "left")
-    val out = ej.agg(count(lit(1)).as("n_test_users"),
+    ej.agg(count(lit(1)).as("n_test_users"),
         sum(when(col("rnk") === 1, lit(1L)).otherwise(lit(0L))).as("hits_at1"),
         sum(when(col("rnk") <= 5, lit(1L)).otherwise(lit(0L))).as("hits_at5"),
         sum(when(col("rnk") <= 10, lit(1L)).otherwise(lit(0L))).as("hits_at10"),
@@ -1237,12 +1236,6 @@ object Events {
         col("hits_at10"),
         round(col("sum_rr").cast("double") / col("n_test_users")).cast("long")
           .as("mrr_fp6"))
-    // the result is ONE row — materialize it while `ev` is cached, then
-    // release the cache (it formerly outlived the gate in multi-gate
-    // sessions) and hand back the literal frame
-    val collected = java.util.Arrays.asList(out.collect(): _*)
-    ev.unpersist()
-    spark.createDataFrame(collected, out.schema)
   }
 
   val q210RecMrrSql: String =

@@ -1,6 +1,7 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession, classic}
+import org.apache.spark.sql.graft.Bridge
 
 /** One driver-gated query: a Spark (DataFrame-API) implementation plus, when
   * the semantics are ANSI-SQL-expressible, an equivalent oracle SQL the
@@ -14,8 +15,28 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 final case class Gated(
     name: String,
     df: (SparkSession, String) => DataFrame,
-    oracle: Option[String],
-    /** include in the Bench set (sf0.1)? Currently every gate opts in —
-      * the flag exists so a pathological future gate can be excluded
-      * without restructuring the registry. */
-    bench: Boolean = true)
+    oracle: Option[String])
+
+object Gated {
+  /** Run `body` (one gate run: build AND sink) as the owner of every block
+    * it places: afterwards, also when `body` throws, clear the catalog
+    * cache and remove, blocking, each RDD that gained blocks during `body`
+    * ([[Bridge.rddsWithBlocks]]), reachable or not; RDDs that held blocks
+    * before are never touched. Spark keeps the cache's entry list private,
+    * so the WHOLE cache goes: callers hold no catalog entry of their own
+    * and run no frame `body` returns. Then throws `IllegalStateException`
+    * naming any new RDD still holding blocks, or a cache entry. */
+  def owned[T](spark: SparkSession)(body: => T): T = {
+    val sc = spark.sparkContext
+    val before = Bridge.rddsWithBlocks(sc)
+    val out = try body finally {
+      spark.catalog.clearCache()
+      (Bridge.rddsWithBlocks(sc) -- before).foreach(Bridge.removeRdd(sc, _))
+    }
+    val left = Bridge.rddsWithBlocks(sc) -- before
+    val cached = !spark.asInstanceOf[classic.SparkSession].sharedState.cacheManager.isEmpty
+    if (left.nonEmpty || cached) throw new IllegalStateException(
+      s"gate run left RDDs [${left.toSeq.sorted.mkString(",")}] holding blocks, cache in use: $cached")
+    out
+  }
+}

@@ -12,8 +12,8 @@ import graft.core.{GraftSession, Metrics}
 import graft.queries.{Gated, Registry}
 
 /** Where a gate's wall time goes, layer by layer. Per named gate: one
-  * warm-up, then [[Runs]] runs, each from a [[Bench.quiesce]]d block store
-  * like a bench sample, printing one line per run:
+  * warm-up, then [[Runs]] runs, each [[Gated.owned]] like a bench sample,
+  * printing one line per run:
   *
   *  - `build_ms`, `build_jobs`, `build_stages` — the gate function:
   *    driver-side plan construction plus any eager barrier jobs it runs
@@ -25,8 +25,8 @@ import graft.queries.{Gated, Registry}
   *  - `gap_ms` — action − job: driver time between and around the jobs
   *  - `tasks`, `task_deser_ms`, `task_run_ms` — the action's tasks, and
   *    their summed executor deserialization and run time
-  *  - `rdd_blocks` — RDDs that still hold blocks in the block store after
-  *    the run: what the gate left behind
+  *  - `rdd_blocks` — RDDs holding blocks in the block store after the
+  *    sink, read before the owner releases them: what the gate left
   *
   * With `planDir`, also writes `<planDir>/<gate>.txt`: the formatted
   * explain of the gate's frame, then its exchange and join counts.
@@ -61,16 +61,15 @@ object Trace {
 
   /** One warm-up of `g`, then [[Runs]] traced runs. */
   def runs(spark: SparkSession, m: Metrics, g: Gated, sfDir: String): Seq[Run] = {
-    Bench.runGate(spark, g, sfDir)
-    (1 to Runs).map { i =>
-      Bench.quiesce(spark)
+    Gated.owned(spark)(Bench.runGate(spark, g, sfDir))
+    (1 to Runs).map(i => Gated.owned(spark) {
       val (df, buildMs) = m.named("build")(timed(g.df(spark, sfDir)))
       val (_, actionMs) = m.named("action")(timed(Bench.sink(df)))
       val b = m("build").get
       val a = m("action").get
       Run(g.name, i, buildMs, b.jobs, b.stages, a.phases, actionMs, a.jobs, a.stages, a.jobMs,
         a.tasks, a.taskDeserMs, a.taskRunMs, Bridge.rddsWithBlocks(spark.sparkContext).size)
-    }
+    })
   }
 
   /** Every physical node of `p`, through AQE wrappers and subqueries. */
@@ -82,17 +81,18 @@ object Trace {
 
   /** Write `g`'s formatted explain and its exchange/join counts to
     * `<dir>/<gate>.txt`; returns the summary line. */
-  def writePlan(spark: SparkSession, g: Gated, sfDir: String, dir: String): String = {
-    val qe = g.df(spark, sfDir).queryExecution
-    val counts = nodes(qe.executedPlan).map(_.nodeName)
-      .filter(n => n.contains("Exchange") || n.contains("Join") || n == "CartesianProduct")
-      .groupBy(identity).map { case (n, xs) => s"$n=${xs.size}" }.toSeq.sorted
-      .mkString(" ")
-    val path = Paths.get(dir, s"${g.name}.txt")
-    Files.createDirectories(path.getParent)
-    Files.writeString(path, qe.explainString(FormattedMode) + s"\n$counts\n")
-    s"PLAN ${g.name} $counts -> $path"
-  }
+  def writePlan(spark: SparkSession, g: Gated, sfDir: String, dir: String): String =
+    Gated.owned(spark) {
+      val qe = g.df(spark, sfDir).queryExecution
+      val counts = nodes(qe.executedPlan).map(_.nodeName)
+        .filter(n => n.contains("Exchange") || n.contains("Join") || n == "CartesianProduct")
+        .groupBy(identity).map { case (n, xs) => s"$n=${xs.size}" }.toSeq.sorted
+        .mkString(" ")
+      val path = Paths.get(dir, s"${g.name}.txt")
+      Files.createDirectories(path.getParent)
+      Files.writeString(path, qe.explainString(FormattedMode) + s"\n$counts\n")
+      s"PLAN ${g.name} $counts -> $path"
+    }
 
   def main(args: Array[String]): Unit = {
     val (sfDir, csv, planDir) = args match {

@@ -32,13 +32,17 @@ object Bridge {
     analyzed(df).collect { case lr: execution.LogicalRDD => lr.rdd }
 
   /** Ids of the RDDs that hold blocks in any block manager now, asked of
-    * the block managers themselves (the master is `private[spark]`).
-    * `getPersistentRDDs` is a weak map, so it misses blocks whose RDD
+    * the block managers themselves (the master is `private[spark]`). The
+    * context's persistent-RDD map is weak, so it misses blocks whose RDD
     * object was already collected. */
   def rddsWithBlocks(sc: SparkContext): Set[Int] =
     sc.env.blockManager.master
       .getMatchingBlockIds(_.isRDD, askStorageEndpoints = true)
       .collect { case b: org.apache.spark.storage.RDDBlockId => b.rddId }.toSet
+
+  /** Remove every block of RDD `id`, blocking, with no RDD object: the
+    * master's `removeRdd` plus the context's bookkeeping (`private[spark]`). */
+  def removeRdd(sc: SparkContext, id: Int): Unit = sc.unpersistRDD(id, blocking = true)
 
   /** Rebuild a just-checkpointed frame WITHOUT the carried
     * `originStats`/`originConstraints`. `Dataset.checkpoint` preserves

@@ -1,6 +1,9 @@
 package graft.ops
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.{Seconds, Span}
 
 import graft.SparkSpec
 
@@ -643,13 +646,17 @@ class DedupSpec extends SparkSpec {
           org.apache.spark.sql.types.LongType),
         org.apache.spark.sql.types.StructField("h",
           org.apache.spark.sql.types.LongType))))
-    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val sc = spark.sparkContext
+    val before = Bridge.rddsWithBlocks(sc)
     val got = Dedup.withWinnowCandidates(docs, "doc_id", "text", emptyIdx)(
       _.as[(Long, Long, Long)].collect().toSet)
     assert(got.map(t => (t._1, t._2)) === Set((1L, 2L)))
-    val after = spark.sparkContext.getPersistentRDDs.keySet
-    assert((after -- before).isEmpty,
-      s"loan must unpersist its fingerprint cache, leaked ids: ${after -- before}")
+    // the loan's unpersist is non-blocking: its blocks go shortly after
+    eventually(timeout(Span(15, Seconds))) {
+      val leaked = Bridge.rddsWithBlocks(sc) -- before
+      assert(leaked.isEmpty,
+        s"loan must unpersist its fingerprint cache, leaked ids: $leaked")
+    }
   }
 
   test("compactWinnowIndex: over-df hashes tombstone to one row — " +

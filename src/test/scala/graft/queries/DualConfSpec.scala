@@ -22,6 +22,10 @@ import graft.SparkEntry
   * partition counts and hence double-reduction order, so sum/avg chains
   * legitimately differ in the last ulp — the gate must trip only on real
   * plan-semantic divergence, not on non-associative float addition.
+  *
+  * Every run is [[Gated.owned]], so each gate must also hand the block
+  * store back as it found it and leave the catalog cache empty, under
+  * both conf points: a gate that left a block would throw here.
   */
 class DualConfSpec extends AnyFunSuite {
   private val sf = "/root/testdata/sf0.001"
@@ -39,9 +43,7 @@ class DualConfSpec extends AnyFunSuite {
     spark.conf.set("spark.sql.adaptive.enabled", aqe.toString)
     spark.conf.set("spark.sql.constraintPropagation.enabled", aqe.toString)
     try SparkEntry.queries.map { case (name, fn) =>
-      val out = fn(spark, sf).toJSON.collect().toSeq.map(normFloats).sorted
-      spark.catalog.clearCache() // q47-style persisted intermediates
-      name -> out
+      name -> Gated.owned(spark)(fn(spark, sf).toJSON.collect().toSeq.map(normFloats).sorted)
     }
     finally {
       spark.conf.set("spark.sql.adaptive.enabled", "true")

@@ -976,9 +976,9 @@ class PlanSpec extends SparkSpec {
     val globals = scala.collection.mutable.Buffer.empty[String]
     Registry.all.foreach { g =>
       val plan =
-        try g.df(spark, sf)
+        try Gated.owned(spark)(g.df(spark, sf)
           .asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
-          .queryExecution.sparkPlan
+          .queryExecution.sparkPlan)
         catch { case scala.util.control.NonFatal(e) =>
           failures += s"${g.name}: plan build failed: ${e.getMessage}"; null }
       if (plan != null) {

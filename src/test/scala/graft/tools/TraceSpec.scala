@@ -1,5 +1,7 @@
 package graft.tools
 
+import org.apache.spark.sql.graft.Bridge
+
 import graft.SparkSpec
 import graft.core.Metrics
 import graft.queries.Registry
@@ -29,5 +31,15 @@ class TraceSpec extends SparkSpec {
       java.nio.file.Paths.get(dir, "q215_pagerank.txt"))
     assert(txt.contains("== Physical Plan =="), txt.take(200))
     assert(line.startsWith("PLAN q215_pagerank"), line)
+  }
+
+  test("traced runs and the plan dump leave no block behind") {
+    val sc = spark.sparkContext
+    val before = Bridge.rddsWithBlocks(sc)
+    val m = Metrics.install(spark)
+    try Trace.runs(spark, m, gate, sf) finally m.close()
+    Trace.writePlan(spark, gate, sf, tmpDir("trace-owned"))
+    val left = Bridge.rddsWithBlocks(sc) -- before
+    assert(left.isEmpty, s"RDDs left holding blocks: $left")
   }
 }

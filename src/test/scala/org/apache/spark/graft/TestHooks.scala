@@ -6,7 +6,7 @@ import org.apache.spark.util.ShutdownHookManager
   * shutdown-hook manager — the shared test session must stop BEFORE
   * SparkContext's own shutdown hook (priority
   * `SPARK_CONTEXT_SHUTDOWN_PRIORITY`) so streams are drained and the
-  * scheduler quiesced deterministically — sbt's `Tests.Cleanup` does not
+  * scheduler idle deterministically — sbt's `Tests.Cleanup` does not
   * run inside a forked test JVM (verified r20), so JVM-exit time with a
   * higher priority is the only in-fork "after all suites" point. */
 object TestHooks {

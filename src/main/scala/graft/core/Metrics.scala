@@ -134,6 +134,8 @@ object Metrics {
     *                   tasks (closure, partition, broadcast conf), ms
     * @param taskRunMs  summed executor run time of those tasks, ms
     * @param executions SQL executions in the scope
+    * @param filesScanned files scanned, summed over the scope's successful
+    *                   SQL executions
     * @param phases     Catalyst phase ms (analysis, optimization,
     *                   planning) summed over the scope's executions
     * @param durationMs duration of the scope's LAST successful SQL
@@ -143,7 +145,7 @@ object Metrics {
   final case class Snapshot(name: String, durationMs: Long, rowsOut: Long,
       filesRead: Long, bytesRead: Long, jobs: Int, stages: Int, jobMs: Long,
       tasks: Int, taskDeserMs: Long, taskRunMs: Long,
-      executions: Int, phases: Map[String, Long])
+      executions: Int, filesScanned: Long, phases: Map[String, Long])
 
   /** Upper bound on the listener-bus drain that closes a scope. */
   private val DrainTimeoutMs = 5000L
@@ -158,7 +160,7 @@ object Metrics {
     * by the scope's thread after the drain. */
   private final class Scope {
     private var jobs, stages, tasks, executions = 0
-    private var taskDeserMs, taskRunMs = 0L
+    private var taskDeserMs, taskRunMs, filesScanned = 0L
     private var intervals = List.empty[(Long, Long)]
     private var last = Option.empty[Sql]
     private var phases = Map.empty[String, Long]
@@ -176,6 +178,7 @@ object Metrics {
       executions += 1
       sql.foreach { s =>
         last = Some(s)
+        filesScanned += s.files
         s.phases.foreach { case (k, v) => phases += k -> (phases.getOrElse(k, 0L) + v) }
       }
     }
@@ -189,7 +192,7 @@ object Metrics {
       val jobMs = merged.map { case (s, e) => e - s }.sum
       val s = last.getOrElse(Sql(0L, 0L, 0L, 0L, Map.empty))
       Snapshot(name, s.durationMs, s.rows, s.files, s.bytes, jobs, stages,
-        jobMs, tasks, taskDeserMs, taskRunMs, executions, phases)
+        jobMs, tasks, taskDeserMs, taskRunMs, executions, filesScanned, phases)
     }
   }
 

@@ -79,9 +79,13 @@ class Pipeline(
     * lake write and the anti-join merge at the same time, then monotone
     * state advance. Returns rows inserted.
     *
-    * The batch's row count and max date ride the stage write as observed
-    * metrics: the stage write, the lake write, and the merge's key
-    * broadcast and delta write are the only Spark jobs. If either sink
+    * The batch's row count, max date and min/max `stock_key` ride the
+    * stage write as observed metrics. The key bounds let the merge read
+    * only the warehouse files whose key range overlaps the batch's, so a
+    * day past every published key reads none: the stage write, the lake
+    * write and the merge's delta write are then the only Spark jobs (a
+    * batch that overlaps published files adds the broadcast of their
+    * keys). If either sink
     * fails, the call waits for the other, then rethrows the first
     * failure's own exception with the watermark unmoved; no job of the
     * call is still running when it returns or throws. */
@@ -92,22 +96,27 @@ class Pipeline(
       source.eod(ticker, from), Schemas.eodRaw) // declared-schema contract (§1.2)
     val batch = Observation()
     load(Transforms.transformStock(raw, ticker).observe(batch, count(lit(1)).as("rows"),
-        max(col("stock_date")).cast(StringType).as("max_date")),
-      batch, "stage_stock_prices", Lake.writeStocks, stocksWarehousePath, "stock_key") { m =>
+        max(col("stock_date")).cast(StringType).as("max_date"),
+        min(col("stock_key")).as("min_key"), max(col("stock_key")).as("max_key")),
+      batch, "stage_stock_prices", Lake.writeStocks, stocksWarehousePath, "stock_key",
+      m => Option(m.getString(2)).zip(Option(m.getString(3)))) { m =>
       val newWm = m.getString(1)
       if (newWm != null && newWm > wm) state.advance("Stock", ticker, newWm)
     }
   }
 
   /** Full-refresh market extraction (reference: "LA EXTRACCION DE LOS
-    * MERCADOS ES FULL", `main.py:22-23`); state date is informational. */
+    * MERCADOS ES FULL", `main.py:22-23`); state date is informational.
+    * The merge gets no key bounds: a full refresh's keys span the
+    * published ones, so no warehouse file could be skipped. */
   def runMarket(exchange: String): Long = {
     val batch = Observation()
     // counted before the common-stock filter: a listing of only funds
     // still advances the state date
     load(Transforms.transformMarket(
         source.symbols(exchange).observe(batch, count(lit(1)).as("rows"))),
-      batch, "stage_markets", Lake.writeMarkets, marketsWarehousePath, "market_stockid") { _ =>
+      batch, "stage_markets", Lake.writeMarkets, marketsWarehousePath, "market_stockid",
+      _ => None) { _ =>
       state.advance("Market", exchange, java.time.LocalDate.now().toString)
     }
   }
@@ -116,10 +125,12 @@ class Pipeline(
     * `batch`), the S5 empty-result short-circuit (nothing past the stage
     * written, no state move), both sinks from the stage read back with
     * its declared schema, then `advance` with the observed metrics.
-    * Returns rows inserted. */
+    * `bounds` picks the batch's (min, max) key out of those metrics for
+    * the merge; None makes it scan the whole warehouse. Returns rows
+    * inserted. */
   private def load(df: DataFrame, batch: Observation, stage: String,
-      lake: (DataFrame, String) => Unit, warehousePath: String, key: String)(
-      advance: Row => Unit): Long = {
+      lake: (DataFrame, String) => Unit, warehousePath: String, key: String,
+      bounds: Row => Option[(String, String)])(advance: Row => Unit): Long = {
     val stagePath = s"$warehouseRoot/$stage"
     Scd0.stageLoad(df, stagePath)
     val m = scala.concurrent.Await.result(batch.future,
@@ -132,7 +143,7 @@ class Pipeline(
     // shuffle into spark.sql.shuffle.partitions tasks.
     val staged = spark.read.schema(df.schema).parquet(stagePath).coalesce(1)
     val inserted = Pipeline.alongside(spark)(lake(staged, lakeRoot))(
-      Scd0.mergeAppend(staged, warehousePath, key))
+      Scd0.mergeAppend(staged, warehousePath, key, bounds(m)))
     advance(m)
     inserted
   }

@@ -19,10 +19,13 @@ final case class Gated(
 
 object Gated {
   /** Run `body` (one gate run: build AND sink) as the owner of every block
-    * it places: afterwards, also when `body` throws, clear the catalog
-    * cache and remove, blocking, each RDD that gained blocks during `body`
-    * ([[Bridge.rddsWithBlocks]]), reachable or not; RDDs that held blocks
-    * before are never touched. Spark keeps the cache's entry list private,
+    * it places: afterwards, also when `body` throws, remove, blocking, each
+    * RDD that gained blocks during `body` ([[Bridge.rddsWithBlocks]]),
+    * reachable or not, then clear the catalog cache; RDDs that held blocks
+    * before are never touched. The cache's own unpersist does not block,
+    * so it runs last: run first, it raced the blocking removal of the same
+    * blocks, and a block it dropped first failed that removal with "does
+    * not exist". Spark keeps the cache's entry list private,
     * so the WHOLE cache goes: callers hold no catalog entry of their own
     * and run no frame `body` returns. Then throws `IllegalStateException`
     * naming any new RDD still holding blocks, or a cache entry. */
@@ -30,8 +33,8 @@ object Gated {
     val sc = spark.sparkContext
     val before = Bridge.rddsWithBlocks(sc)
     val out = try body finally {
-      spark.catalog.clearCache()
       (Bridge.rddsWithBlocks(sc) -- before).foreach(Bridge.removeRdd(sc, _))
+      spark.catalog.clearCache()
     }
     val left = Bridge.rddsWithBlocks(sc) -- before
     val cached = !spark.asInstanceOf[classic.SparkSession].sharedState.cacheManager.isEmpty

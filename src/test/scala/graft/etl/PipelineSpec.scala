@@ -176,19 +176,30 @@ class PipelineSpec extends SparkSpec {
   }
 
   // exactly, not at most: the stage write, the lake write (on the side
-  // thread, so a lake job escaping the caller's job tags would count 3),
-  // the merge's key broadcast and its delta write. One stage each: the
-  // stage reads back as one partition, so the merge's dropDuplicates runs
-  // inside the scan task, with no shuffle
-  test("one-row incremental runStock runs exactly 4 Spark jobs") {
+  // thread, so a lake job escaping the caller's job tags would count 2)
+  // and the merge's delta write. The batch's one key lies past every
+  // published key, so the merge reads no warehouse file and broadcasts
+  // nothing. One stage each: the stage reads back as one partition, so
+  // the merge's dropDuplicates runs inside the scan task, with no shuffle
+  test("one-row incremental runStock runs exactly 3 Spark jobs") {
     val p = mkPipeline()
     p.runStock("MSFT")
     p.state.advance("Stock", "AAPL", "2024-06-04") // one day left to extract
     val (inserted, s) = staticPlanner(scoped(p.runStock("AAPL")))
     assert(inserted === 1L)
-    assert(s.jobs === 4, s"runStock ran ${s.jobs} jobs")
-    assert(s.stages === 4, s"runStock ran ${s.stages} stages")
+    assert(s.jobs === 3, s"runStock ran ${s.jobs} jobs")
+    assert(s.stages === 3, s"runStock ran ${s.stages} stages")
     assert(p.state.watermark("Stock", "AAPL") === "2024-06-05")
+  }
+
+  test("a one-row runStock past every published key reads no warehouse file") {
+    val p = mkPipeline()
+    p.runStock("MSFT")
+    p.state.advance("Stock", "AAPL", "2024-06-04")
+    val (inserted, s) = staticPlanner(scoped(p.runStock("AAPL")))
+    assert(inserted === 1L)
+    // the extract, and the stage read back by each sink
+    assert(s.filesScanned === 3L, s"runStock scanned ${s.filesScanned} files")
   }
 
   test("a bulk runStock or runMarket publishes exactly 1 warehouse file") {
@@ -270,6 +281,22 @@ class PipelineSpec extends SparkSpec {
     assert(p.runStock("AAPL") === 0L) // replayed, nothing new
     assert(p.warehouseStocks().count() === 3)
     assert(p.state.watermark("Stock", "AAPL") === "2024-06-05")
+  }
+
+  test("a replay after a crash between publish and state advance reads the published file") {
+    val root = tmpDir("pipe")
+    val blocker = new java.io.File(s"$root/state")
+    assert(blocker.createNewFile())
+    intercept[java.io.IOException](
+      mkPipeline(root, Some(s"$root/state/state.json")).runStock("AAPL"))
+    assert(blocker.delete())
+    val p = mkPipeline(root, Some(s"$root/state/state.json"))
+    val (inserted, s) = staticPlanner(scoped(p.runStock("AAPL")))
+    assert(inserted === 0L)
+    // the extract, the stage read back by each sink, and the file the
+    // crashed run published, whose key range holds every replayed key
+    assert(s.filesScanned === 4L, s"runStock scanned ${s.filesScanned} files")
+    assert(p.warehouseStocks().count() === 3)
   }
 
   /** Block one sink of AAPL's first run with a regular file at `blocked`
